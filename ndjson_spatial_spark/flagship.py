@@ -13,6 +13,11 @@ Scan budget on the docs table: refs build + fast stream + (when enabled)
 one general-shape pass — all embarrassingly-parallel columnar scans; the
 struct cover UDF in the general branch only ever sees the (usually empty)
 non-bbox rows because the shape filter precedes it.
+
+Join strategy: the ref sample is ~1/ref_mod of the polygon spans, so the
+fast path's bbox join always broadcasts it (bbox_intersection_join has no
+other plan); the general branch uses spatial_intersection_join's default
+broadcast ref.
 """
 
 from __future__ import annotations

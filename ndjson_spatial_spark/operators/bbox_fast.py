@@ -11,34 +11,38 @@ intermediate materialization:
 
     flat_bbox        geometry struct -> 4 double cols + is_point flag
     bbox_intersection_join
-                     sequence-explode cover -> cell equi-join (broadcast or
-                     hash) -> max-corner pair dedup -> interval refinement;
-                     emits the intersection bbox, no structs
+                     sequence-explode cover -> broadcast cell equi-join ->
+                     max-corner pair dedup -> interval refinement; emits
+                     the intersection bbox, no structs
     assign_tiles_bbox
                      per-zoom integer tile ranges -> sequence explode ->
                      exact keep predicates -> Morton tile ids
 
 Semantics are IDENTICAL to spatial_intersection_join + assign_tiles on the
-same shapes (pinned by tests/test_bbox_fast.py equivalence tests); general
-geometries take the struct operators (`operators/spatial.py`) — callers
-split on `is_bbox_shape` and union the outputs.
+same shapes (pinned by tests/test_bbox_fast.py equivalence tests); the
+point/rect refinement itself (`point_rect_refinement`) is shared with the
+struct join's point/rect branch.  General geometries take the struct
+operators (`operators/spatial.py`) — callers split on `is_bbox_shape` and
+union the outputs.
 
-Scale notes: the only exchange is the broadcast (or cell-hash) candidate
-join; fan-out per row equals the true cover size (callers route rows whose
-cover exceeds `max_cells_axis` per axis to the general path, which has the
+Scale notes: the only exchange is the broadcast of the (small) ref side;
+a ref too large to broadcast belongs on spatial_intersection_join, which
+owns the hash-partitioned and hot-cell-salted plans.  Fan-out per row
+equals the true cover size (callers route rows whose cover exceeds
+`max_cells_axis` per axis to the general path, which has the
 cap+ancestor-terms machinery); everything else is narrow and codegen'd.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.cells_fn import cell_id_expr
 from ..kernels.cells import MERC_MAX
 
 __all__ = ["flat_bbox", "is_bbox_shape", "bbox_intersection_join",
-           "assign_tiles_bbox"]
+           "assign_tiles_bbox", "point_rect_refinement"]
 
 
 def is_bbox_shape(geom_col) -> "F.Column":
@@ -64,14 +68,58 @@ def flat_bbox(df: DataFrame, geom_col: str = "geom",
     })
 
 
-def _tile_index(coord, res: int, flip: bool):
-    """Mercator coordinate -> clamped level-`res` tile index (Catalyst)."""
-    n = 1 << res
-    u = (MERC_MAX - coord) / (2.0 * MERC_MAX) if flip \
-        else (coord + MERC_MAX) / (2.0 * MERC_MAX)
-    t = F.floor(u * F.lit(float(n))).cast("long")
+def _bbox_names(prefix: str) -> list[str]:
+    """The flat bbox column names under `prefix`, box first, flag last."""
+    return [f"{prefix}{c}" for c in ("minx", "miny", "maxx", "maxy", "pt")]
+
+
+def _box(prefix: str) -> tuple:
+    """(minx, miny, maxx, maxy) Columns of the flat bbox under `prefix`."""
+    return tuple(F.col(c) for c in _bbox_names(prefix)[:4])
+
+
+def point_rect_refinement(s_pt, r_pt, s_box, r_box) -> tuple:
+    """Exact refinement of a point/axis-rect candidate pair, pure Catalyst.
+
+    ``s_box`` / ``r_box`` are each side's (minx, miny, maxx, maxy) Columns
+    (a point's bbox is the point itself); ``s_pt`` / ``r_pt`` flag points.
+    Returns ``(keep, ibox)``.  ``keep`` applies the boundary rules of the
+    struct operator: point == point, point-in-rect CLOSED (a point on the
+    edge intersects), rect-rect only with strictly positive overlap
+    (touching rects do not).  ``ibox`` is the intersection's (minx, miny,
+    maxx, maxy): the point when either side is one, else the overlap."""
+    sminx, sminy, smaxx, smaxy = s_box
+    rminx, rminy, rmaxx, rmaxy = r_box
+    ix0, ix1 = F.greatest(sminx, rminx), F.least(smaxx, rmaxx)
+    iy0, iy1 = F.greatest(sminy, rminy), F.least(smaxy, rmaxy)
+
+    def inside(px, py, x0, y0, x1, y1):
+        return (px >= x0) & (px <= x1) & (py >= y0) & (py <= y1)
+
+    keep = (
+        F.when(s_pt & r_pt, (sminx == rminx) & (sminy == rminy))
+        .when(s_pt, inside(sminx, sminy, *r_box))
+        .when(r_pt, inside(rminx, rminy, *s_box))
+        .otherwise((ix1 > ix0) & (iy1 > iy0))
+    )
+    ibox = tuple(
+        F.when(s_pt, sv).when(r_pt, rv).otherwise(iv)
+        for sv, rv, iv in ((sminx, rminx, ix0), (sminy, rminy, iy0),
+                           (sminx, rminx, ix1), (sminy, rminy, iy1))
+    )
+    return keep, ibox
+
+
+def _tile_index(coord, res, flip: bool):
+    """Mercator coordinate -> clamped level-`res` tile index (Catalyst).
+    `res` is an int or an integer Column (assign_tiles_bbox's zoom)."""
+    n = (F.pow(F.lit(2.0), res) if isinstance(res, Column)
+         else F.lit(float(1 << res)))
+    u = (F.lit(MERC_MAX) - coord) / F.lit(2.0 * MERC_MAX) if flip \
+        else (coord + F.lit(MERC_MAX)) / F.lit(2.0 * MERC_MAX)
+    t = F.floor(u * n).cast("long")
     return F.greatest(F.lit(0).cast("long"),
-                      F.least(F.lit(n - 1).cast("long"), t))
+                      F.least((n - 1).cast("long"), t))
 
 
 def _with_cover(df: DataFrame, res: int, p: str, cp: str) -> DataFrame:
@@ -96,35 +144,20 @@ def bbox_intersection_join(
     stream: DataFrame,
     ref: DataFrame,
     res: int,
-    broadcast_ref: bool = True,
-    salt_hot_cells: bool = False,
-    hot_threshold: int = 100_000,
-    target_per_salt: int = 50_000,
 ) -> DataFrame:
     """Intersection join over flat bbox frames (see flat_bbox; stream uses
     prefix __b, ref must carry ONLY __rminx/__rminy/__rmaxx/__rmaxy/__rpt).
 
     Same contract as spatial_intersection_join restricted to point/rect
-    shapes: one row per intersecting pair, stream columns preserved, the
-    intersection emitted as flat bbox columns __iminx/__iminy/__imaxx/
-    __imaxy + __ipt (a point iff either side is a point).  Boundary
-    semantics match the struct operator's fast paths exactly: rect-rect
-    requires strictly positive overlap, point-in-rect is closed.
+    shapes: one row per intersecting pair, stream columns other than the
+    five __b bbox columns preserved, the intersection emitted as flat bbox
+    columns __iminx/__iminy/__imaxx/__imaxy + __ipt (a point iff either
+    side is a point); boundary rules in `point_rect_refinement`.  The ref
+    side is always broadcast.
     """
     s = _with_cover(stream, res, "__b", "__s")
     r = _with_cover(ref, res, "__r", "__q")
-
-    if broadcast_ref:
-        j = s.join(F.broadcast(r), F.col("__scell") == F.col("__qcell"))
-    elif salt_hot_cells:
-        from ..plans.salting import salted_equi_join
-
-        j = salted_equi_join(
-            s, r.withColumnRenamed("__qcell", "__scell"), "__scell",
-            hot_threshold, target_per_salt,
-        )
-    else:
-        j = s.join(r, F.col("__scell") == F.col("__qcell"))
+    j = s.join(F.broadcast(r), F.col("__scell") == F.col("__qcell"))
 
     # exactly-once pair dedup: a pair shares the rectangle of cells
     # [max(tx0s, tx0r) ..] x [max(ty0s, ty0r) ..]; keep only its corner
@@ -134,30 +167,11 @@ def bbox_intersection_join(
     )
 
     sp, rp = F.col("__bpt"), F.col("__rpt")
-    px, py = F.col("__bminx"), F.col("__bminy")
-    qx, qy = F.col("__rminx"), F.col("__rminy")
-    ix0 = F.greatest(F.col("__bminx"), F.col("__rminx"))
-    ix1 = F.least(F.col("__bmaxx"), F.col("__rmaxx"))
-    iy0 = F.greatest(F.col("__bminy"), F.col("__rminy"))
-    iy1 = F.least(F.col("__bmaxy"), F.col("__rmaxy"))
-    keep = (
-        F.when(sp & rp, (px == qx) & (py == qy))
-        .when(sp, (px >= F.col("__rminx")) & (px <= F.col("__rmaxx"))
-              & (py >= F.col("__rminy")) & (py <= F.col("__rmaxy")))
-        .when(rp, (qx >= F.col("__bminx")) & (qx <= F.col("__bmaxx"))
-              & (qy >= F.col("__bminy")) & (qy <= F.col("__bmaxy")))
-        .otherwise((ix1 > ix0) & (iy1 > iy0))
-    )
-    out = j.where(keep).withColumns({
-        "__iminx": F.when(sp, px).when(rp, qx).otherwise(ix0),
-        "__iminy": F.when(sp, py).when(rp, qy).otherwise(iy0),
-        "__imaxx": F.when(sp, px).when(rp, qx).otherwise(ix1),
-        "__imaxy": F.when(sp, py).when(rp, qy).otherwise(iy1),
-        "__ipt": sp | rp,
-    })
-    keep_cols = [c for c in stream.columns if not c.startswith("__b")]
-    return out.select(
-        *keep_cols, "__iminx", "__iminy", "__imaxx", "__imaxy", "__ipt"
+    keep, ibox = point_rect_refinement(sp, rp, _box("__b"), _box("__r"))
+    s_bbox = _bbox_names("__b")
+    return j.where(keep).select(
+        *[c for c in stream.columns if c not in s_bbox],
+        *[v.alias(n) for n, v in zip(_bbox_names("__i"), ibox + (sp | rp,))],
     )
 
 
@@ -168,32 +182,25 @@ def assign_tiles_bbox(
 ) -> DataFrame:
     """Tile assignment over flat bbox columns — pure Catalyst end to end.
 
-    One row per (input row, zoom, intersecting tile); outputs
-    (zoom, tile_x, tile_y, tile_id) exactly like assign_tiles (same keep
+    One row per (input row, zoom, intersecting tile); outputs the input
+    columns other than the five `prefix` bbox columns plus
+    (zoom, tile_x, tile_y, tile_id), exactly like assign_tiles (same keep
     predicates: point half-open on x / half-open-flipped on y, rect strict
     overlap; Morton tile_id).  The zoom axis rides ONE explode so multiple
     zooms still scan the input once.
     """
     p = prefix
     z = F.col("__z")
-    n = F.pow(F.lit(2.0), z)
-    size = F.lit(2.0 * MERC_MAX) / n
-
-    def tidx(coord, flip: bool):
-        u = (F.lit(MERC_MAX) - coord) / F.lit(2.0 * MERC_MAX) if flip \
-            else (coord + F.lit(MERC_MAX)) / F.lit(2.0 * MERC_MAX)
-        t = F.floor(u * n).cast("long")
-        return F.greatest(F.lit(0).cast("long"),
-                          F.least((n - 1).cast("long"), t))
+    size = F.lit(2.0 * MERC_MAX) / F.pow(F.lit(2.0), z)
 
     out = df.withColumn(
         "__z", F.explode(F.array(*[F.lit(int(zz)) for zz in zooms]))
     )
     out = out.withColumns({
-        "__ztx0": tidx(F.col(f"{p}minx"), False),
-        "__ztx1": tidx(F.col(f"{p}maxx"), False),
-        "__zty0": tidx(F.col(f"{p}maxy"), True),
-        "__zty1": tidx(F.col(f"{p}miny"), True),
+        "__ztx0": _tile_index(F.col(f"{p}minx"), z, False),
+        "__ztx1": _tile_index(F.col(f"{p}maxx"), z, False),
+        "__zty0": _tile_index(F.col(f"{p}maxy"), z, True),
+        "__zty1": _tile_index(F.col(f"{p}miny"), z, True),
     })
     out = out.withColumn("__ztx", F.explode(F.sequence("__ztx0", "__ztx1")))
     out = out.withColumn("__zty", F.explode(F.sequence("__zty0", "__zty1")))
@@ -210,9 +217,9 @@ def assign_tiles_bbox(
         (F.col(f"{p}minx") < tmaxx) & (F.col(f"{p}maxx") > tminx)
         & (F.col(f"{p}miny") < tmaxy) & (F.col(f"{p}maxy") > tminy)
     )
-    keep_cols = [c for c in df.columns if not c.startswith(p)]
+    bbox = _bbox_names(p)
     return out.where(keep).select(
-        *keep_cols,
+        *[c for c in df.columns if c not in bbox],
         z.cast("int").alias("zoom"),
         F.col("__ztx").alias("tile_x"),
         F.col("__zty").alias("tile_y"),

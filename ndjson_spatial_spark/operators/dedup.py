@@ -593,9 +593,6 @@ def duplicate_spans(
     text_col: str = "text",
     id_col: str = "doc_id",
     count_within_doc: bool = True,
-    hash_grams: bool = True,
-    contract_docs: bool = True,
-    skew_safe: bool = False,
 ) -> DataFrame:
     """Exact duplicate-SPAN detection: every maximal token span of at
     least ``min_tokens`` whitespace tokens that occurs two or more times
@@ -618,69 +615,56 @@ def duplicate_spans(
     ``id_col, span_start, span_end, n_windows`` (all integers, exact).
 
     Plan (the 100 TB shape): window generation is a narrow Catalyst
-    projection (split -> sequence explode -> concat_ws slice, zero
+    projection (split -> sequence explode -> hashed slice, zero
     Python); the ONLY wide exchange is the groupBy on the window key —
     the same single-shuffle shape as the suffix-array build's sort in the
     published pipeline.  The per-document span merge is a window function
     over (doc, start): islands form where ``start - lag(start) >
     min_tokens`` (window ends are start + L, monotone in start, so the
-    lag test is exact interval merging).  At production scale pass
-    ``xxhash64`` window keys instead of strings via the grouped column —
-    the string form is kept here because it is the EXACT algorithm (the
-    hash is a space optimization with 2^-64 collision risk); swap by
-    replacing ``__gram`` with ``F.xxhash64("__gram")`` — the plan shape
-    is identical.
+    lag test is exact interval merging).
 
-    ``hash_grams`` (default True, round-6): exactly that swap — carry
-    ``xxhash64(gram)`` through the wide exchange instead of the ~L-token
-    gram STRING, so the exchange + sort operate on 8-byte longs instead
-    of ~100-byte strings (2^-64 per-pair collision risk as documented
-    above; pass False for the bit-exact string form).
+    Window keys are ``xxhash64`` of the gram's token slice, not the
+    ~L-token gram STRING, so the wide exchange + sort operate on 8-byte
+    longs instead of ~100-byte strings (round-6).  The string form is the
+    EXACT algorithm; the hash is a space optimization with 2^-64 per-pair
+    collision risk, and the plan shape is identical.
 
-    ``contract_docs`` (round-6, guide §2.2 — dedup before the expensive
-    work): documents with IDENTICAL normalized text are contracted to one
-    representative (keyed by ``xxhash64(trim(lower(text)))``, so even
-    tokenization runs only on representatives) carrying a
-    multiplicity ``m`` BEFORE window explosion; the duplicate test
-    weights window counts by ``m`` (``sum(m) >= 2`` — every copy
-    contributes its occurrences), spans are computed once per distinct
-    text, and the (doc_id, key) mapping joins them back to every copy.
-    Exactness: the duplicate criterion is corpus-global, so identical
-    texts have identical span sets; total corpus occurrences of a gram
-    equal the multiplicity-weighted occurrences over distinct texts.
-    On duplicate-heavy corpora (the operator's own raison d'être) this
-    divides the exploded-window exchange by the duplication factor;
-    active only when ``hash_grams`` (same 2^-64 collision envelope) and
-    ``count_within_doc`` (the distinct-doc variant would need per-key
-    set weighting) are both set.
+    Document contraction (round-6, guide §2.2 — dedup before the
+    expensive work, active when ``count_within_doc``): documents with
+    IDENTICAL normalized text are contracted to one representative (keyed
+    by ``xxhash64(trim(lower(text)))``, so even tokenization runs only on
+    representatives) carrying a multiplicity ``m`` BEFORE window
+    explosion; the duplicate test weights window counts by ``m``
+    (``sum(m) >= 2`` — every copy contributes its occurrences), spans are
+    computed once per distinct text, and the (doc_id, key) mapping joins
+    them back to every copy.  Exactness: the duplicate criterion is
+    corpus-global, so identical texts have identical span sets; total
+    corpus occurrences of a gram equal the multiplicity-weighted
+    occurrences over distinct texts.  On duplicate-heavy corpora (the
+    operator's own raison d'être) this divides the exploded-window
+    exchange by the duplication factor.  The distinct-doc variant
+    (``count_within_doc=False``) would need per-key set weighting, so it
+    generates windows from every document, uncontracted.
     """
     L = int(min_tokens)
     if L < 2:
         raise ValueError("min_tokens must be >= 2")
     t = F.trim(F.lower(F.col(text_col)))
-    staged = df.select(
-        F.col(id_col),
-        F.when(t == "", F.array().cast("array<string>"))
-        .otherwise(F.split(t, r"\s+")).alias("__toks"),
-    )
     n = F.size("__toks")
     starts = F.when(
         n >= L, F.sequence(F.lit(0), n - F.lit(L))
     ).otherwise(F.array().cast("array<int>"))
-    # hash_grams hashes the token-slice ARRAY directly (xxhash64 hashes
-    # complex types element-wise): equality of space-free token sequences
-    # == equality of the joined gram string, and skipping the concat_ws
-    # string build measured another ~2s on the 200k-doc worst case
-    win_toks = F.slice(F.col("__toks"), F.col("s") + 1, L)
-    gram = (F.xxhash64(win_toks) if hash_grams
-            else F.concat_ws(" ", win_toks))
+    # hash the token-slice ARRAY directly (xxhash64 hashes complex types
+    # element-wise): equality of space-free token sequences == equality of
+    # the joined gram string, and skipping the concat_ws string build
+    # measured another ~2s on the 200k-doc worst case
+    gram = F.xxhash64(F.slice(F.col("__toks"), F.col("s") + 1, L))
     # doc contraction (see docstring): windows are generated from ONE
     # representative per distinct token sequence, weighted by multiplicity.
     # The key is the hash of the NORMALIZED TEXT (identical normalized
     # text => identical token split), so tokenization itself only runs on
     # the representatives, not the whole corpus.
-    contract = bool(contract_docs and hash_grams and count_within_doc)
-    if contract:
+    if count_within_doc:
         keyed = df.select(F.col(id_col), t.alias("__t")) \
             .withColumn("__key", F.xxhash64("__t"))
         reps = keyed.groupBy("__key").agg(
@@ -695,6 +679,11 @@ def duplicate_spans(
             "__key", "__m", F.col("__toks"), F.explode(starts).alias("s")
         ).select("__key", "__m", "s", gram.alias("__gram"))
     else:
+        staged = df.select(
+            F.col(id_col),
+            F.when(t == "", F.array().cast("array<string>"))
+            .otherwise(F.split(t, r"\s+")).alias("__toks"),
+        )
         wins = staged.select(
             F.col(id_col), F.col("__toks"), F.explode(starts).alias("s")
         ).select(id_col, "s", gram.alias("__gram"))
@@ -707,53 +696,16 @@ def duplicate_spans(
     # all-duplicate worst case.  count_within_doc=False needs a distinct
     # count, which Spark window aggregates don't support — collect_set
     # (bounded by docs sharing the gram) keeps it exact and single-pass.
-    doc_key = "__key" if contract else id_col
-    if skew_safe and not df.isStreaming:
-        # two-phase duplicate test (round-6, VERDICT r5 item 5 — de-skew):
-        # a window count partitioned by gram puts EVERY instance of one
-        # pathological gram (boilerplate at corpus scale) on a single
-        # reducer with no partial aggregation.  Instead: materialize the
-        # window rows once (localCheckpoint — the second consumer would
-        # otherwise re-run tokenize+explode), PARTIAL-aggregate the
-        # per-gram count map-side (hot grams combine before the
-        # exchange), and left-semi join the duplicated grams back.  The
-        # join's residual per-gram skew is AQE-splittable; the dup test
-        # itself no longer concentrates.  OPT-IN: at bench scale the
-        # extra job boundary + checkpoint measured +0.4 s over the
-        # window form (interleaved A/B, doc contraction active), so the
-        # default stays the window; pass True when one gram can
-        # dominate the corpus (the contraction already absorbs the
-        # usual case — exact-duplicate boilerplate TEXTS collapse before
-        # the window, dividing every gram's window count by the
-        # duplication factor).
-        wins = wins.localCheckpoint()
-        if contract:
-            # total corpus occurrences = multiplicity-weighted
-            # occurrences over distinct texts
-            per_gram = wins.groupBy("__gram").agg(
-                F.sum("__m").alias("__n"))
-        elif count_within_doc:
-            per_gram = wins.groupBy("__gram").agg(
-                F.count(F.lit(1)).alias("__n"))
-        else:
-            per_gram = wins.groupBy("__gram").agg(
-                F.countDistinct(F.col(id_col)).alias("__n"))
-        dup_grams = per_gram.where(F.col("__n") >= 2).select("__gram")
-        hits = wins.join(dup_grams, "__gram", "left_semi") \
-            .select(doc_key, "s")
+    doc_key = "__key" if count_within_doc else id_col
+    wg = Window.partitionBy("__gram")
+    if count_within_doc:
+        dup_test = F.sum("__m").over(wg) >= 2
     else:
-        # default (and streaming) path: ONE gram-keyed window
-        wg = Window.partitionBy("__gram")
-        if contract:
-            dup_test = F.sum("__m").over(wg) >= 2
-        elif count_within_doc:
-            dup_test = F.count(F.lit(1)).over(wg) >= 2
-        else:
-            dup_test = F.size(F.collect_set(F.col(id_col)).over(wg)) >= 2
-        hits = (
-            wins.withColumn("__dup", dup_test)
-            .where(F.col("__dup")).select(doc_key, "s")
-        )
+        dup_test = F.size(F.collect_set(F.col(id_col)).over(wg)) >= 2
+    hits = (
+        wins.withColumn("__dup", dup_test)
+        .where(F.col("__dup")).select(doc_key, "s")
+    )
 
     w = Window.partitionBy(doc_key).orderBy("s")
     isl = (
@@ -773,7 +725,7 @@ def duplicate_spans(
             F.count("*").alias("n_windows"),
         )
     )
-    if contract:
+    if count_within_doc:
         # expand spans back to every copy of the text (inner join: docs
         # without duplicated spans produce no rows, as before; the spans
         # side is tiny relative to the corpus, so AQE broadcasts it)

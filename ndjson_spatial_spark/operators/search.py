@@ -17,9 +17,9 @@ to ONE partial-combined global aggregate producing a single row, which
 joins back as a broadcast (a 1-row broadcast is free).  The final top-k
 is ``orderBy(...).limit(k)`` → Catalyst TakeOrderedAndProject: every
 reducer keeps its local k and the driver merges k·P candidates — no
-global sort.  Total cost: one scan for stats + one scan for scores (or
-one scan if the projected (tf…, dl) frame is persisted), no wide
-exchange anywhere.
+global sort.  Total cost: one scan, whose narrow (tf…, dl) projection
+is checkpointed for the stats and scoring passes; no wide exchange
+anywhere.
 """
 
 from __future__ import annotations
@@ -45,7 +45,6 @@ def bm25_score_topk(
     b: float = 0.75,
     text_col: str = "text",
     id_col: str = "doc_id",
-    single_scan: bool = True,
 ) -> DataFrame:
     """Exact BM25 top-k for a conjunctive-OR keyword query.
 
@@ -64,17 +63,16 @@ def bm25_score_topk(
     Output: ``id_col, rank, score, n_matched, total_tf, dl`` — one row
     per retrieved document, rank 1..k.
 
-    ``single_scan`` (default True, round-6): the stats aggregate and the
-    scoring pass both consume the tokenized (dl, tf…) projection, which
-    otherwise re-tokenizes the corpus once per pass (the docstring's
-    "two scan-bound passes").  With ``single_scan`` the narrow feats
-    frame (id + one int per term) is localCheckpoint'd — tokenization
-    runs exactly ONCE per invocation, the checkpoint is private to this
-    query (freed on GC, nothing survives across runs), and both passes
-    read the ~40-bytes/doc materialization (measured ~2x on the 200k-doc
-    bench).  At 100 TB the checkpoint is rows x ~40 B on executor
-    local storage — the standard space-for-scan trade; pass False to
-    keep the pure two-scan form.
+    Single scan (round-6): the stats aggregate and the scoring pass both
+    consume the tokenized (dl, tf…) projection, which would otherwise
+    re-tokenize the corpus once per pass.  The narrow feats frame (id +
+    one int per term) is localCheckpoint'd instead — tokenization runs
+    exactly ONCE per invocation, the checkpoint is private to this query
+    (freed on GC, nothing survives across runs), and both passes read the
+    ~40-bytes/doc materialization (measured ~2x on the 200k-doc bench).
+    At 100 TB the checkpoint is rows x ~40 B on executor local storage —
+    the standard space-for-scan trade.  Streaming inputs (no checkpoint
+    on streaming plans) keep the two-pass form.
     """
     if not terms:
         raise ValueError("terms must be non-empty")
@@ -97,7 +95,7 @@ def bm25_score_topk(
     ]
     feats = staged.select(
         id_col, F.size("__toks").alias("__dl"), *tf_cols)
-    if single_scan and not df.isStreaming:
+    if not df.isStreaming:
         feats = feats.localCheckpoint()
 
     # ONE global aggregate -> a single stats row (N, avgdl, df_t per term)

@@ -31,6 +31,7 @@ from ..functions.cells_fn import (
     cell_id_expr,
     make_st_cells_bounds_multi,
 )
+from .bbox_fast import point_rect_refinement
 
 
 def _is_axis_rect(g, minx=None, maxx=None, miny=None, maxy=None) -> "F.Column":
@@ -960,15 +961,9 @@ def spatial_intersection_join(
     single_term = (F.size("__cov") == 1) & (F.size("__anc") == 0)
     drop_cols = ["__term", "__cov", "__anc", "__res_used",
                  "__ref_cov", "__ref_anc", "__ref_res_used"]
-    if broadcast_ref:
-        def cand_of(ssub, rsub):
-            j = ssub.alias("s").join(
-                F.broadcast(rsub.alias("r")),
-                F.col("s.__term") == F.col("r.__term"), "inner")
-            return j.where(
-                single_term | (F.col("s.__term") == min_common)
-            ).drop(*drop_cols)
-    elif salt_hot_cells:
+    # the salt map of the hot cell terms, or None for a plain term join
+    salt = None
+    if salt_hot_cells and not broadcast_ref:
         # 100 TB path: hash-partitioned cell join with EXPLICIT hot-cell
         # salting (north rule) layered over AQE's skew splitting — geographic
         # cell frequencies are Zipfian, so a handful of city cells would
@@ -1013,43 +1008,32 @@ def spatial_intersection_join(
         # emptiness probe materializes the (persisted) plan the broadcast
         # would have materialized anyway, so detection costs nothing
         # extra, and hot inputs take the salted branch exactly as before.
-        if plan.isEmpty():
-            def cand_of(ssub, rsub):
-                j = ssub.alias("s").join(
-                    rsub.alias("r"),
-                    F.col("s.__term") == F.col("r.__term"), "inner")
-                return j.where(
-                    single_term | (F.col("s.__term") == min_common)
-                ).drop(*drop_cols)
+        if not plan.isEmpty():
+            salt = plan
+
+    def cand_of(ssub, rsub):
+        """Deduplicated candidate pairs of one (stream kind, ref kind)
+        sub-join: salted on (term, salt) when the sketch found hot terms,
+        else a plain term equi-join (ref broadcast when `broadcast_ref`)."""
+        if salt is not None:
+            sj = apply_salt_scatter(ssub, "__term", salt)
+            rj = apply_salt_replicate(rsub, "__term", salt)
+            j = sj.join(rj, ["__term", "__salt"], "inner").drop("__salt")
+            term = F.col("__term")
         else:
-            def cand_of(ssub, rsub):
-                sj = apply_salt_scatter(ssub, "__term", plan)
-                rj = apply_salt_replicate(rsub, "__term", plan)
-                j = sj.join(rj, ["__term", "__salt"], "inner").drop("__salt")
-                return j.where(
-                    single_term | (F.col("__term") == min_common)
-                ).drop(*drop_cols)
-    else:
-        def cand_of(ssub, rsub):
+            r = rsub.alias("r")
             j = ssub.alias("s").join(
-                rsub.alias("r"),
+                F.broadcast(r) if broadcast_ref else r,
                 F.col("s.__term") == F.col("r.__term"), "inner")
-            return j.where(
-                single_term | (F.col("s.__term") == min_common)
-            ).drop(*drop_cols)
+            term = F.col("s.__term")
+        return j.where(single_term | (term == min_common)).drop(*drop_cols)
 
     # ---- refinement: pure-Catalyst fast paths for the dominant shapes ----
     # (round-6: all predicates read the per-side scalar metadata computed
     # before the join — zero array ops per candidate on the fast paths)
     sg = F.col(geom_col)
     rg = F.col("__ref_geom")
-    SK, RK = F.col("__s_kind"), F.col("__r_kind")
-    sminx, smaxx = F.col("__s_minx"), F.col("__s_maxx")
-    sminy, smaxy = F.col("__s_miny"), F.col("__s_maxy")
-    rminx, rmaxx = F.col("__r_minx"), F.col("__r_maxx")
-    rminy, rmaxy = F.col("__r_miny"), F.col("__r_maxy")
-    ix0, ix1 = F.greatest(sminx, rminx), F.least(smaxx, rmaxx)
-    iy0, iy1 = F.greatest(sminy, rminy), F.least(smaxy, rmaxy)
+    s_pt, r_pt = F.col("__s_kind") == 0, F.col("__r_kind") == 0
 
     def rect_geom(x0, y0, x1, y1):
         return F.struct(
@@ -1061,22 +1045,14 @@ def spatial_intersection_join(
         )
 
     fast = cand_of(s_f, r_f)
-    # point bboxes degenerate to the point itself, so px == __s_minx etc.
-    fast_keep = (
-        F.when((SK == 1) & (RK == 1), (ix1 > ix0) & (iy1 > iy0))
-        .when((SK == 0) & (RK == 1),
-              (sminx >= rminx) & (sminx <= rmaxx)
-              & (sminy >= rminy) & (sminy <= rmaxy))
-        .when((SK == 1) & (RK == 0),
-              (rminx >= sminx) & (rminx <= smaxx)
-              & (rminy >= sminy) & (rminy <= smaxy))
-        .otherwise((sminx == rminx) & (sminy == rminy))
+    # the same point/rect rules as the flat bbox join (one helper); a
+    # point side survives as its own geometry, two rects as their overlap
+    fast_keep, ibox = point_rect_refinement(
+        s_pt, r_pt,
+        tuple(F.col(f"__s_{c}") for c in ("minx", "miny", "maxx", "maxy")),
+        tuple(F.col(f"__r_{c}") for c in ("minx", "miny", "maxx", "maxy")),
     )
-    fast_geom = (
-        F.when((SK == 1) & (RK == 1), rect_geom(ix0, iy0, ix1, iy1))
-        .when((SK == 1) & (RK == 0), rg)
-        .otherwise(sg)  # pr / pp: the stream point survives
-    )
+    fast_geom = F.when(s_pt, sg).when(r_pt, rg).otherwise(rect_geom(*ibox))
     fast_out = fast.where(fast_keep).withColumn("__igeom", fast_geom)
 
     # general geometries: Arrow-batched exact kernels (the slow path only

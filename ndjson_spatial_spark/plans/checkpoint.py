@@ -6,8 +6,8 @@ checkpoint").
 This is deliberately NOT Structured Streaming state (the reference has no
 streaming semantics, SURVEY §2.7) — it's the batch-pipeline resume model:
 at 10^12 docs a multi-stage job dies occasionally; rerunning must not redo
-finished stages.  The manifest carries per-stage row counts, which is also
-the lineage anchor for plans/metrics.py.
+finished stages.  The manifest carries per-stage row counts, the lineage
+anchor a rerun or a monitor reads without scanning the data.
 """
 
 from __future__ import annotations

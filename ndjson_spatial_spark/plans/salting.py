@@ -15,7 +15,8 @@ them.  The pattern here is classic two-sided salting:
   4. the BUILD side replicates each hot-key row to ALL salts;
   5. join on (key, salt) — hot keys now spread across `factor` tasks.
 
-The salt map is tiny (only hot keys) and broadcast.
+The salt map is tiny (only hot keys) and broadcast.  The cell-index
+candidate join of operators/spatial.py composes these steps itself.
 """
 
 from __future__ import annotations
@@ -24,7 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = ["key_frequency_sketch", "salt_plan", "apply_salt_scatter",
-           "apply_salt_replicate", "salted_equi_join"]
+           "apply_salt_replicate"]
 
 
 def key_frequency_sketch(df: DataFrame, key: str, sample_frac: float | None = None) -> DataFrame:
@@ -85,19 +86,3 @@ def apply_salt_replicate(df: DataFrame, key: str, plan: DataFrame) -> DataFrame:
         ),
     ).drop("salt_factor")
 
-
-def salted_equi_join(
-    probe: DataFrame, build: DataFrame, key: str,
-    hot_threshold: int = 100_000, target_per_salt: int = 50_000,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-safe equi-join on `key`: sketch -> salt -> join on (key, salt).
-
-    Use for the cell-index candidate join when the ref side is too big to
-    broadcast and cell frequencies are Zipfian (hot-city cells)."""
-    freq = key_frequency_sketch(probe, key)
-    plan = salt_plan(freq, key, hot_threshold, target_per_salt)
-    p = apply_salt_scatter(probe, key, plan)
-    b = apply_salt_replicate(build, key, plan)
-    out = p.join(b, [key, "__salt"], how)
-    return out.drop("__salt")

@@ -396,8 +396,8 @@ class TableCatalog:
 
     def row_count(self, name: str) -> int:
         """Metadata-only current row count (sum of snapshot line items for
-        the directories the current snapshot references) — the lineage
-        anchor plans/metrics.py style checks use without a data scan."""
+        the directories the current snapshot references) — a lineage
+        check that needs no data scan."""
         snaps = self.snapshots(name)
         if "rows_total" in snaps[-1]:
             return snaps[-1]["rows_total"]

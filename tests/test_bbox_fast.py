@@ -1,9 +1,12 @@
 """Pure-Catalyst bbox fast path: equivalence with the struct operators and
 no-Python plan guarantees (the flagship's scaling path)."""
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
+from ndjson_spatial_spark.functions.geo import parse_geojson
 from ndjson_spatial_spark.operators.bbox_fast import (
     assign_tiles_bbox,
     bbox_intersection_join,
@@ -36,33 +39,90 @@ def _flat_ref(spark, rows):
 M = 100000.0
 
 
+def _gj(minx, miny, maxx, maxy, is_pt):
+    if is_pt:
+        return json.dumps({"type": "Point", "coordinates": [minx, miny]})
+    ring = [[minx, miny], [maxx, miny], [maxx, maxy], [minx, maxy],
+            [minx, miny]]
+    return json.dumps({"type": "Polygon", "coordinates": [ring]})
+
+
+def _via_bbox(spark, stream_rows, ref_rows, res):
+    out = bbox_intersection_join(
+        _flat(spark, stream_rows), _flat_ref(spark, ref_rows), res=res)
+    return sorted(
+        (r["id"], (r["__iminx"], r["__iminy"], r["__imaxx"], r["__imaxy"]),
+         r["__ipt"])
+        for r in out.collect()
+    )
+
+
+def _via_struct(spark, stream_rows, ref_rows, res):
+    s = spark.createDataFrame(
+        [(r[0], _gj(*r[1:])) for r in stream_rows], ["id", "gj"]
+    ).select("id", parse_geojson("gj").alias("geom"))
+    r = spark.createDataFrame(
+        [(_gj(*r),) for r in ref_rows], ["gj"]
+    ).select(parse_geojson("gj").alias("geom"))
+    out = spatial_intersection_join(s, r, res=res)
+    return sorted(
+        (row["id"], (min(row.geom.x), min(row.geom.y),
+                     max(row.geom.x), max(row.geom.y)),
+         row.geom.geom_type == "Point")
+        for row in out.collect()
+    )
+
+
+# both joins refine point/rect pairs with one shared helper; each boundary
+# test runs through both callers so the shared rules stay pinned for each
+JOINS = {"bbox_intersection_join": _via_bbox,
+         "spatial_intersection_join": _via_struct}
+
+
 class TestBboxJoin:
     def test_rect_rect_overlap_and_dedup(self, spark):
         # both spread over many cells at res 8 -> pair meets many times,
         # must emit exactly once with the exact overlap bbox
-        s = _flat(spark, [("a", 0.0, 0.0, 30 * M, 30 * M, False)])
-        r = _flat_ref(spark, [(10 * M, 10 * M, 50 * M, 50 * M, False)])
-        out = bbox_intersection_join(s, r, res=8).collect()
-        assert len(out) == 1
-        row = out[0]
-        assert (row["__iminx"], row["__iminy"], row["__imaxx"], row["__imaxy"]) \
-            == (10 * M, 10 * M, 30 * M, 30 * M)
-        assert not row["__ipt"]
+        for name, run in JOINS.items():
+            got = run(spark, [("a", 0.0, 0.0, 30 * M, 30 * M, False)],
+                      [(10 * M, 10 * M, 50 * M, 50 * M, False)], 8)
+            assert got == [("a", (10 * M, 10 * M, 30 * M, 30 * M), False)], \
+                name
 
     def test_point_semantics_closed_rect(self, spark):
-        s = _flat(spark, [
+        stream = [
             ("on_edge", 0.0, 0.0, 0.0, 0.0, True),
             ("inside", M, M, M, M, True),
             ("outside", -M, -M, -M, -M, True),
-        ])
-        r = _flat_ref(spark, [(0.0, 0.0, 2 * M, 2 * M, False)])
-        got = {r_["id"] for r_ in bbox_intersection_join(s, r, res=8).collect()}
-        assert got == {"on_edge", "inside"}
+        ]
+        for name, run in JOINS.items():
+            got = run(spark, stream, [(0.0, 0.0, 2 * M, 2 * M, False)], 8)
+            assert got == [("inside", (M, M, M, M), True),
+                           ("on_edge", (0.0, 0.0, 0.0, 0.0), True)], name
 
     def test_touching_rects_excluded(self, spark):
-        s = _flat(spark, [("t", 0.0, 0.0, M, M, False)])
-        r = _flat_ref(spark, [(M, 0.0, 2 * M, M, False)])
-        assert bbox_intersection_join(s, r, res=8).count() == 0
+        for name, run in JOINS.items():
+            got = run(spark, [("t", 0.0, 0.0, M, M, False)],
+                      [(M, 0.0, 2 * M, M, False)], 8)
+            assert got == [], name
+
+    def test_dunder_stream_columns_survive_join_and_tiles(self, spark):
+        # only the named bbox columns are consumed: a caller's __bucket
+        # (prefix __b) and __id (prefix __i) columns ride through both
+        s = spark.createDataFrame(
+            [(7, 3, 0.0, 0.0, M, M, False)],
+            ["__id", "__bucket",
+             "__bminx", "__bminy", "__bmaxx", "__bmaxy", "__bpt"])
+        r = _flat_ref(spark, [(0.0, 0.0, M, M, False)])
+        joined = bbox_intersection_join(s, r, res=8)
+        assert joined.columns == [
+            "__id", "__bucket",
+            "__iminx", "__iminy", "__imaxx", "__imaxy", "__ipt"]
+        tiled = assign_tiles_bbox(joined, [6])
+        assert tiled.columns == [
+            "__id", "__bucket", "zoom", "tile_x", "tile_y", "tile_id"]
+        rows = tiled.collect()
+        assert rows and {(t["__id"], t["__bucket"]) for t in rows} == {(7, 3)}
 
     def test_no_python_in_plan(self, spark):
         s = _flat(spark, [("a", 0.0, 0.0, M, M, False)])
@@ -185,16 +245,23 @@ class TestEquivalenceWithStructOperators:
         assert "Python" not in plan, plan
 
     def test_shuffle_path_identical(self, spark, pipelines):
+        # the broadcast bbox join against the struct join's hash-partitioned
+        # and hot-cell-salted plans, which only the struct join offers
         geoms, refs = pipelines
         flat = flat_bbox(geoms.select("doc_id", "geom")).drop("geom")
         rflat = flat_bbox(refs, prefix="__r").drop("geom")
         bcast = sorted(map(tuple, bbox_intersection_join(
             flat, rflat, res=9).select("doc_id", "__iminx", "__ipt").collect()))
-        shuf = sorted(map(tuple, bbox_intersection_join(
-            flat, rflat, res=9, broadcast_ref=False
-        ).select("doc_id", "__iminx", "__ipt").collect()))
-        salted = sorted(map(tuple, bbox_intersection_join(
-            flat, rflat, res=9, broadcast_ref=False, salt_hot_cells=True,
-            hot_threshold=5, target_per_salt=5,
-        ).select("doc_id", "__iminx", "__ipt").collect()))
+
+        def struct(**kw):
+            out = spatial_intersection_join(
+                geoms, refs, res=9, broadcast_ref=False, **kw)
+            return sorted(map(tuple, out.select(
+                "doc_id", F.array_min("geom.x"),
+                F.col("geom.geom_type") == "Point").collect()))
+
+        shuf = struct()
+        salted = struct(salt_hot_cells=True, hot_threshold=5,
+                        target_per_salt=5)
+        assert len(bcast) > 100
         assert bcast == shuf == salted

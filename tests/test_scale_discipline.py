@@ -1,5 +1,5 @@
-"""Scale-discipline tests: salting, checkpoint/resume, lineage metrics,
-streaming (north-rule requirements, SURVEY §2.7)."""
+"""Scale-discipline tests: salting, checkpoint/resume, layout, streaming
+(north-rule requirements, SURVEY §2.7)."""
 
 import json
 import os
@@ -8,14 +8,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from ndjson_spatial_spark.plans.checkpoint import StagedPipeline
-from ndjson_spatial_spark.plans.metrics import (
-    MetricsCollector,
-    partition_histogram,
-)
 from ndjson_spatial_spark.plans.salting import (
+    apply_salt_replicate,
+    apply_salt_scatter,
     key_frequency_sketch,
     salt_plan,
-    salted_equi_join,
 )
 
 
@@ -43,15 +40,17 @@ class TestSalting:
         plain = skewed.join(build, "cell").agg(
             F.count(F.lit(1)).alias("n"), F.sum("payload").alias("s")
         ).collect()[0]
-        salted = salted_equi_join(
-            skewed, build, "cell", hot_threshold=1000, target_per_salt=1000
+        # the probe/build composition spatial_intersection_join uses
+        freq = key_frequency_sketch(skewed, "cell")
+        plan = salt_plan(freq, "cell", hot_threshold=1000, target_per_salt=1000)
+        salted = apply_salt_scatter(skewed, "cell", plan).join(
+            apply_salt_replicate(build, "cell", plan), ["cell", "__salt"]
         ).agg(F.count(F.lit(1)).alias("n"), F.sum("payload").alias("s")).collect()[0]
         assert (plain.n, plain.s) == (salted.n, salted.s)
 
     def test_salt_spreads_hot_key(self, spark, skewed):
         freq = key_frequency_sketch(skewed, "cell")
         plan = salt_plan(freq, "cell", hot_threshold=1000, target_per_salt=1000)
-        from ndjson_spatial_spark.plans.salting import apply_salt_scatter
         scattered = apply_salt_scatter(skewed, "cell", plan)
         n_salts = (
             scattered.where(F.col("cell") == 1).select("__salt").distinct().count()
@@ -92,23 +91,6 @@ class TestCheckpoint:
         p2 = StagedPipeline(spark, base)
         p2.stage("s1", lambda: spark.range(10))
         assert p2.completed["s1"] == "computed"
-
-
-class TestMetrics:
-    def test_partition_histogram_sums_to_total(self, spark):
-        df = spark.range(1000).repartition(7)
-        h = partition_histogram(df).collect()
-        assert sum(r.rows for r in h) == 1000
-        assert len(h) <= 7
-
-    def test_collector_counts_rows_and_partitions(self, spark):
-        df = spark.range(500).repartition(4)
-        mc = MetricsCollector(spark, "test_stage")
-        wrapped = mc.wrap(df)
-        assert wrapped.count() == 500
-        snap = mc.snapshot()
-        assert snap["rows"] == 500
-        assert snap["partitions_seen"] >= 1
 
 
 class TestZOrderLayout:

@@ -112,27 +112,6 @@ def test_duplicate_spans_distinct_islands(spark):
     assert got == [(1, 0, 4), (1, 9, 13), (2, 0, 4), (2, 6, 10)]
 
 
-def test_duplicate_spans_skew_safe_matches_and_partial_aggregates(spark):
-    # the opt-in two-phase dup test (VERDICT r5 item 5) must return the
-    # identical span set AND show a partial-combined per-gram aggregate
-    # (no single-reducer window over the gram) in its plan
-    rows = [(i, "a b c d e f g h repeated tail tokens here") for i in range(20)] \
-        + [(100 + i, f"unique{i} solo text nothing shared at all {i}")
-           for i in range(5)]
-    sdf = spark.createDataFrame(rows, "doc_id int, text string")
-    base = sorted(
-        (r.doc_id, r.span_start, r.span_end, r.n_windows)
-        for r in duplicate_spans(sdf, min_tokens=4).collect())
-    safe_df = duplicate_spans(sdf, min_tokens=4, skew_safe=True)
-    safe = sorted(
-        (r.doc_id, r.span_start, r.span_end, r.n_windows)
-        for r in safe_df.collect())
-    assert safe == base and len(base) > 0
-    plan = safe_df._jdf.queryExecution().executedPlan().toString()
-    assert "partial_sum" in plan or "partial_count" in plan
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-
-
 # ---------------------------------------------------------------- dbscan --
 def _dbscan_ref(pts, eps, min_pts):
     """Brute-force deterministic DBSCAN (min-label variant)."""
