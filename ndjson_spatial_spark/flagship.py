@@ -11,8 +11,8 @@ tests/test_bbox_fast.py equivalence tests against the struct pipeline.
 
 Scan budget on the docs table: refs build + fast stream + (when enabled)
 one general-shape pass — all embarrassingly-parallel columnar scans; the
-struct cover UDF in the general branch only ever sees the (usually empty)
-non-bbox rows because the shape filter precedes it.
+general branch's parse UDF and exact tile refinement only ever see the
+(usually empty) non-bbox rows because the shape filter precedes them.
 
 Join strategy: the ref sample is ~1/ref_mod of the polygon spans, so the
 fast path's bbox join always broadcasts it (bbox_intersection_join has no

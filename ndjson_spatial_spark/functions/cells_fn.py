@@ -1,4 +1,5 @@
-"""Cell-index column functions (pandas UDFs over the numpy cell kernels).
+"""Cell-index column functions: pure-Catalyst cell ids and tile indices,
+plus pandas UDFs over the numpy cell kernels where fan-out favours them.
 
 These are the engine's H3/S2-style primitives (BASELINE.json north star):
 every geometry gets a sorted cell-index column; candidate spatial joins are
@@ -10,6 +11,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
@@ -20,9 +22,7 @@ from .geo import geom_to_batch
 
 __all__ = ["st_geohash", "decode_geohash", "GEOHASH_BASE32",
            "st_hex_index", "hex_center_expr",
-           "st_cell_of_point", "make_st_cells", "make_st_cells_terms",
-           "make_st_cells_terms_expr",
-           "make_ring_cells", "make_disk_cells", "tile_bounds_expr",
+           "st_cell_of_point", "make_st_cells", "make_disk_cells",
            "cell_id_expr"]
 
 #: largest double strictly below 1.0 — unit_xy's clip ceiling
@@ -43,17 +43,27 @@ def _unit_v_expr(y_col):
     return F.least(F.greatest(v, F.lit(0.0)), F.lit(_U_MAX))
 
 
+def _tile_index(coord, res, flip: bool = False):
+    """Mercator coordinate -> level-`res` tile index, pure Catalyst: the
+    floor of unit_xy's clipped u (v when `flip`) times 2^res, so always in
+    [0, 2^res - 1].  Point cells, the bbox join's cover and the zoom-tile
+    cover all use it.  `res` is an int or an integer Column (a zoom
+    column; 2.0^z is exact for integer z)."""
+    n = (F.pow(F.lit(2.0), res) if isinstance(res, Column)
+         else F.lit(float(1 << res)))
+    u = _unit_v_expr(coord) if flip else _unit_u_expr(coord)
+    return F.floor(u * n).cast("long")
+
+
 def st_cell_of_point(x_col, y_col, res: int):
     """Level-`res` cell id of mercator point columns — pure Catalyst
     (round-6; was a pandas UDF).  Bit-exact twin of
     kernels.cells.point_cells: same unit_xy clip, same floor-to-tile,
     same Morton encoding (cell_id_expr), but whole-stage codegen'd with
     no Python worker round-trip (guide §4.1: built-ins over UDFs).
-    Equivalence is pinned by test_cells_fn's expr-vs-kernel sweep."""
-    scale = F.lit(float(1 << res))
-    tx = F.floor(_unit_u_expr(x_col) * scale).cast("long")
-    ty = F.floor(_unit_v_expr(y_col) * scale).cast("long")
-    return cell_id_expr(tx, ty, F.lit(res))
+    Equivalence is pinned by test_mixed_resolution's expr-vs-kernel sweep."""
+    return cell_id_expr(_tile_index(x_col, res),
+                        _tile_index(y_col, res, flip=True), F.lit(res))
 
 
 def make_st_cells(res: int, cap: int = 256):
@@ -80,151 +90,6 @@ def make_st_cells(res: int, cap: int = 256):
     return st_cells
 
 
-def make_st_cells_terms(res: int, cap: int = 256, min_res: int | None = None,
-                        anc_levels=()):
-    """Returns st_cells_terms(geom) -> struct<cov:array<long>,
-    anc:array<long>, res_used:int> — the join-term generator.
-
-    `cov` is the bbox cover at `res`, coarsened by the `cap` guard but
-    never below `min_res` (default res-6).  `anc` holds the cover's unique
-    ancestor cells at each level in `anc_levels` (strictly below the row's
-    res_used).  Spatial joins combine cov/anc terms so covers at MIXED
-    resolutions still meet on an equi-join — the covering+ancestor-terms
-    scheme (see kernels.cells.cover_ancestors); plain same-res covers pay
-    zero ancestor overhead when `anc_levels` is empty.
-    """
-    if min_res is None:
-        min_res = max(0, res - 6)
-    anc_levels = [int(l) for l in anc_levels]
-    out_type = T.StructType([
-        T.StructField("cov", T.ArrayType(T.LongType())),
-        T.StructField("anc", T.ArrayType(T.LongType())),
-        T.StructField("res_used", T.IntegerType()),
-    ])
-
-    @pandas_udf(out_type)
-    def st_cells_terms(geom: pd.DataFrame) -> pd.DataFrame:
-        n = len(geom)
-        cov = [None] * n
-        anc = [None] * n
-        ru = np.full(n, res, np.int32)
-        bg, valid = geom_to_batch(geom)
-        if bg.n_rows:
-            is_pt = np.zeros(bg.n_rows, bool)
-            bb = KG.batch_bbox(bg, is_pt)
-            covers, res_used = KC.bbox_cells(
-                bb[:, 0], bb[:, 2], bb[:, 1], bb[:, 3], res,
-                cap=cap, min_res=min_res,
-            )
-            ancs = (KC.cover_ancestors(covers, res_used, anc_levels)
-                    if anc_levels else None)
-            for j, i in enumerate(np.flatnonzero(valid)):
-                cov[i] = [int(c) for c in covers[j]]
-                anc[i] = ([int(c) for c in ancs[j]] if ancs is not None else [])
-                ru[i] = int(res_used[j])
-        return pd.DataFrame({"cov": cov, "anc": anc, "res_used": ru})
-
-    return st_cells_terms
-
-
-def make_st_cells_terms_expr(res: int, cap: int = 256,
-                             min_res: int | None = None, anc_levels=()):
-    """Pure-Catalyst twin of :func:`make_st_cells_terms` (round-6).
-
-    Returns terms(geom_col) -> struct<cov:array<long>, anc:array<long>,
-    res_used:int> computing the SAME values as the pandas-UDF form
-    (pinned by test_cells_fn's expr-vs-kernel sweep; ancestor arrays are
-    set-equal — enumeration order differs, which no consumer observes:
-    covers feed explode / array_intersect / array_min only):
-
-      * bbox from array_min/max over the geometry's coordinate arrays
-        (== batch_bbox with is_point=False);
-      * res_used by the kernel's descending coarsen scan — the first
-        level in [res .. min_res] whose bbox tile count fits `cap`,
-        floored at min_res, as a plan-time `when` cascade (res - min_res
-        branches, each a handful of long ops);
-      * cover = the bbox tile range at res_used enumerated y-outer /
-        x-inner (sequence + transform; bounded by `cap`), Morton-encoded
-        by cell_id_expr;
-      * ancestors at each constant level l < res_used = the bbox tile
-        range at l (identical as a SET to np.unique(cell_parent(cov, l)):
-        parents of a contiguous tile range form the contiguous parent
-        range, floor-nesting makes the direct trunc(u * 2^l) equal to the
-        shifted tiles).
-
-    Why: the UDF form moved every geometry struct JVM->Python->JVM just
-    to compute ~a dozen longs per row (ArrowEvalPython on both sides of
-    every spatial join — measured 3.4 s for a 20k-row ref side at bench
-    scale); this form stays inside codegen (the per-cell lambda is an
-    interpreted HOF, but bounded by `cap` elements over scalar longs).
-    Rows with a null/empty coordinate array yield null cov/anc and
-    res_used = `res`, matching the UDF's invalid-row contract.
-    """
-    if min_res is None:
-        min_res = max(0, res - 6)
-    anc_levels = sorted({int(l) for l in anc_levels})
-
-    def terms(g):
-        minx, maxx = F.array_min(g["x"]), F.array_max(g["x"])
-        miny, maxy = F.array_min(g["y"]), F.array_max(g["y"])
-        u0, v0 = _unit_u_expr(minx), _unit_v_expr(maxy)
-        u1, v1 = _unit_u_expr(maxx), _unit_v_expr(miny)
-
-        # all level-dependent pieces take the LEVEL AS A COLUMN (one
-        # expression tree total, not one per level — an unrolled
-        # per-level cascade measured ~10 s of py4j/analyzer time per
-        # query build); 2^r stays exact via a long shiftleft then an
-        # exact int->double cast
-        def scale_of(rcol):
-            return F.call_function(
-                "shiftleft", F.lit(1).cast("long"), rcol).cast("double")
-
-        def rng(rcol):
-            sc = scale_of(rcol)
-            return ((u0 * sc).cast("long"), (u1 * sc).cast("long"),
-                    (v0 * sc).cast("long"), (v1 * sc).cast("long"))
-
-        def cells_at(rcol):
-            tx0, tx1, ty0, ty1 = rng(rcol)
-            return F.flatten(F.transform(
-                F.sequence(ty0, ty1),
-                lambda dy: F.transform(
-                    F.sequence(tx0, tx1),
-                    lambda dx: cell_id_expr(dx, dy, rcol))))
-
-        def cnt(rcol):
-            tx0, tx1, ty0, ty1 = rng(rcol)
-            return (tx1 - tx0 + 1) * (ty1 - ty0 + 1)
-
-        # the kernel's descending first-fit coarsen scan == the LARGEST
-        # fitting level (tile counts are monotone non-increasing as the
-        # level coarsens: floor-halving never widens a range)
-        ru = F.array_max(F.filter(
-            F.sequence(F.lit(min_res), F.lit(res)),
-            lambda r: (cnt(r) <= F.lit(cap)) | (r == F.lit(min_res))))
-        cov = cells_at(ru)
-
-        if anc_levels:
-            lv_arr = F.array(*[F.lit(int(l)) for l in anc_levels])
-            anc = F.flatten(F.transform(
-                lv_arr,
-                lambda l: F.when(l < ru, cells_at(l))
-                .otherwise(F.array().cast("array<long>"))))
-        else:
-            anc = F.array().cast("array<long>")
-
-        valid = g["x"].isNotNull() & (F.size(g["x"]) > 0)
-        na = F.lit(None).cast("array<long>")
-        return F.struct(
-            F.when(valid, cov).otherwise(na).alias("cov"),
-            F.when(valid, anc).otherwise(na).alias("anc"),
-            F.when(valid, ru).otherwise(F.lit(res)).cast("int")
-            .alias("res_used"),
-        )
-
-    return terms
-
-
 def cell_id_expr(tx_col, ty_col, res_col):
     """Pure-Catalyst cell id from (tile_x, tile_y, res) columns: the same
     Morton interleave as kernels.cells.cell_id, as a branch-free chain of
@@ -240,79 +105,6 @@ def cell_id_expr(tx_col, ty_col, res_col):
 
     morton = spread(tx_col).bitwiseOR(F.shiftleft(spread(ty_col), 1))
     return F.shiftleft(res_col.cast("long"), 58).bitwiseOR(morton)
-
-
-def make_st_cells_bounds_multi(zooms: list, cap: int = 1024):
-    """Cover cells + their mercator rects for SEVERAL zooms in one UDF pass,
-    as FLAT parallel arrays (struct of arrays) — downstream explodes with
-    JVM arrays_zip, and per-candidate refinement stays in Catalyst.  The
-    per-row Python is only list assembly from vectorized numpy; no per-cell
-    kernel calls.
-
-    Covers exceeding `cap` are coarsened (bbox_cells) and each entry then
-    carries dres = zoom - res_used > 0; assign_tiles expands those entries
-    into their true zoom-level child tiles in pure Catalyst, so emitted
-    rows are ALWAYS on the zoom-z grid (never mislabeled coarse tiles)."""
-    out_type = T.StructType([
-        T.StructField("zoom", T.ArrayType(T.IntegerType())),
-        T.StructField("dres", T.ArrayType(T.IntegerType())),
-        T.StructField("minx", T.ArrayType(T.DoubleType())),
-        T.StructField("miny", T.ArrayType(T.DoubleType())),
-        T.StructField("maxx", T.ArrayType(T.DoubleType())),
-        T.StructField("maxy", T.ArrayType(T.DoubleType())),
-    ])
-
-    @pandas_udf(out_type)
-    def st_cells_bounds_multi(geom: pd.DataFrame) -> pd.DataFrame:
-        n = len(geom)
-        cols = {k: [None] * n for k in ("zoom", "dres", "minx", "miny", "maxx", "maxy")}
-        bg, valid = geom_to_batch(geom)
-        if bg.n_rows:
-            is_pt = np.zeros(bg.n_rows, bool)
-            bb = KG.batch_bbox(bg, is_pt)  # [minx, maxx, miny, maxy]
-            idx = np.flatnonzero(valid)
-            per_zoom = []
-            for z in zooms:
-                covers, res_used = KC.bbox_cells(
-                    bb[:, 0], bb[:, 2], bb[:, 1], bb[:, 3], z, cap=cap
-                )
-                per_zoom.append((z, covers, res_used))
-            for j, i in enumerate(idx):
-                zs, ds, x0s, y0s, x1s, y1s = [], [], [], [], [], []
-                for z, covers, res_used in per_zoom:
-                    cells = covers[j]
-                    r = int(res_used[j])
-                    tx, ty = KC.cell_tile_xy(cells)
-                    size = 2.0 * KC.MERC_MAX / (1 << r)
-                    minx = -KC.MERC_MAX + tx * size
-                    maxy = KC.MERC_MAX - ty * size
-                    zs.extend([z] * len(cells))
-                    ds.extend([z - r] * len(cells))
-                    x0s.extend(minx.tolist())
-                    y0s.extend((maxy - size).tolist())
-                    x1s.extend((minx + size).tolist())
-                    y1s.extend(maxy.tolist())
-                cols["zoom"][i] = zs
-                cols["dres"][i] = ds
-                cols["minx"][i] = x0s
-                cols["miny"][i] = y0s
-                cols["maxx"][i] = x1s
-                cols["maxy"][i] = y1s
-        return pd.DataFrame(cols)
-
-    return st_cells_bounds_multi
-
-
-def make_ring_cells(k: int):
-    """Returns ring_cells(cell) -> array<long>: the 8k cells at Chebyshev
-    ring exactly k (kNN expanding search, SURVEY §2.3 J6)."""
-
-    @pandas_udf(T.ArrayType(T.LongType()))
-    def ring_cells(cell: pd.Series) -> pd.Series:
-        ring = KC.cell_neighbors_ring(cell.to_numpy(), k)
-        return pd.Series([[int(c) for c in row if c >= 0] for row in ring])
-
-    return ring_cells
 
 
 def make_disk_cells(res: int, cap: int = 4096):
@@ -345,30 +137,6 @@ def make_disk_cells(res: int, cap: int = 4096):
         })
 
     return disk_cells
-
-
-def tile_bounds_expr(cell_col, zoom: int):
-    """Mercator bounds of a level-`zoom` cell/tile, as (minx,miny,maxx,maxy)
-    columns — pure Catalyst bit arithmetic would need de-interleave; use a
-    vectorized UDF returning a struct."""
-
-    @pandas_udf(T.StructType([
-        T.StructField("minx", T.DoubleType()),
-        T.StructField("miny", T.DoubleType()),
-        T.StructField("maxx", T.DoubleType()),
-        T.StructField("maxy", T.DoubleType()),
-    ]))
-    def _bounds(cell: pd.Series) -> pd.DataFrame:
-        tx, ty = KC.cell_tile_xy(cell.to_numpy())
-        size = 2.0 * KC.MERC_MAX / (1 << zoom)
-        minx = -KC.MERC_MAX + tx * size
-        maxy = KC.MERC_MAX - ty * size
-        return pd.DataFrame({
-            "minx": minx, "miny": maxy - size,
-            "maxx": minx + size, "maxy": maxy,
-        })
-
-    return _bounds(cell_col)
 
 
 GEOHASH_BASE32 = "0123456789bcdefghjkmnpqrstuvwxyz"

@@ -21,24 +21,25 @@ intermediate materialization:
 Semantics are IDENTICAL to spatial_intersection_join + assign_tiles on the
 same shapes (pinned by tests/test_bbox_fast.py equivalence tests); the
 point/rect refinement itself (`point_rect_refinement`) is shared with the
-struct join's point/rect branch.  General geometries take the struct
-operators (`operators/spatial.py`) — callers split on `is_bbox_shape` and
-union the outputs.
+struct join's point/rect branch.  The zoom-tile cover (`_tiles`) is the
+only one in the engine: the struct operator `assign_tiles` projects its
+geometries with `flat_bbox`, routes point/rect rows through
+assign_tiles_bbox, and refines general rows' tiles of the same cover with
+its exact geometry-vs-rect kernel.
 
 Scale notes: the only exchange is the broadcast of the (small) ref side;
 a ref too large to broadcast belongs on spatial_intersection_join, which
-owns the hash-partitioned and hot-cell-salted plans.  Fan-out per row
-equals the true cover size (callers route rows whose cover exceeds
-`max_cells_axis` per axis to the general path, which has the
-cap+ancestor-terms machinery); everything else is narrow and codegen'd.
+owns the hash-partitioned and hot-cell-salted plans and the
+cap+ancestor-terms machinery for huge covers.  Fan-out per row equals the
+true cover size; everything else is narrow and codegen'd.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells_fn import cell_id_expr
+from ..functions.cells_fn import _tile_index, cell_id_expr
 from ..kernels.cells import MERC_MAX
 
 __all__ = ["flat_bbox", "is_bbox_shape", "bbox_intersection_join",
@@ -110,27 +111,27 @@ def point_rect_refinement(s_pt, r_pt, s_box, r_box) -> tuple:
     return keep, ibox
 
 
-def _tile_index(coord, res, flip: bool):
-    """Mercator coordinate -> clamped level-`res` tile index (Catalyst).
-    `res` is an int or an integer Column (assign_tiles_bbox's zoom)."""
-    n = (F.pow(F.lit(2.0), res) if isinstance(res, Column)
-         else F.lit(float(1 << res)))
-    u = (F.lit(MERC_MAX) - coord) / F.lit(2.0 * MERC_MAX) if flip \
-        else (coord + F.lit(MERC_MAX)) / F.lit(2.0 * MERC_MAX)
-    t = F.floor(u * n).cast("long")
-    return F.greatest(F.lit(0).cast("long"),
-                      F.least((n - 1).cast("long"), t))
+def _reject_staged(df: DataFrame, staged) -> None:
+    """Raise if an input column has a name the operator stages: the staged
+    column would silently replace the caller's data."""
+    for c in df.columns:
+        if c in staged:
+            raise ValueError(
+                f"input column {c!r} collides with a column name the "
+                f"operator stages internally; rename it")
 
 
 def _with_cover(df: DataFrame, res: int, p: str, cp: str) -> DataFrame:
     """Explode the integer cover ranges of the bbox (prefix `p`) at `res`:
     adds {cp}tx0/{cp}ty0 (range starts, used by the pair-dedup rule), the
     exploded {cp}tx/{cp}ty, and the Morton {cp}cell."""
+    _reject_staged(df, [f"{cp}{c}" for c in
+                        ("tx0", "tx1", "ty0", "ty1", "tx", "ty", "cell")])
     out = df.withColumns({
-        f"{cp}tx0": _tile_index(F.col(f"{p}minx"), res, False),
-        f"{cp}tx1": _tile_index(F.col(f"{p}maxx"), res, False),
-        f"{cp}ty0": _tile_index(F.col(f"{p}maxy"), res, True),
-        f"{cp}ty1": _tile_index(F.col(f"{p}miny"), res, True),
+        f"{cp}tx0": _tile_index(F.col(f"{p}minx"), res),
+        f"{cp}tx1": _tile_index(F.col(f"{p}maxx"), res),
+        f"{cp}ty0": _tile_index(F.col(f"{p}maxy"), res, flip=True),
+        f"{cp}ty1": _tile_index(F.col(f"{p}miny"), res, flip=True),
     })
     out = out.withColumn(f"{cp}tx", F.explode(F.sequence(f"{cp}tx0", f"{cp}tx1")))
     out = out.withColumn(f"{cp}ty", F.explode(F.sequence(f"{cp}ty0", f"{cp}ty1")))
@@ -175,6 +176,74 @@ def bbox_intersection_join(
     )
 
 
+#: the columns `_tiles` stages (zoom, tile ranges, exploded tile x/y)
+_TILE_STAGED = ("__z", "__ztx0", "__ztx1", "__zty0", "__zty1",
+                "__ztx", "__zty")
+
+
+def _tiles(df: DataFrame, zooms, p: str, refine) -> DataFrame:
+    """The zoom-tile cover of the flat bbox under prefix `p`, refined.
+
+    Every row explodes its zooms (ONE explode, so several zooms still scan
+    the input once), then the integer tile-x range, then the tile-y range
+    of its bbox.  ``refine(tminx, tminy, tmaxx, tmaxy)`` gets the tile
+    bounds as Columns and returns the keep predicate.  Emits the input
+    columns other than the five `p` bbox columns plus
+    (zoom, tile_x, tile_y, tile_id); tile_id is the Morton cell id.
+    Rows with a null bbox emit nothing (the sequence explodes are empty).
+
+    Tile column t spans [xedge(t), xedge(t + 1)) and tile row t spans
+    (yedge(t + 1), yedge(t)]: neighbours share one edge value, so the
+    bounds partition the plane.  `_tile_index` rounds the division of
+    x + MERC_MAX, so a coordinate within rounding distance of an edge can
+    index the neighbour of the tile the edges put it in (never further);
+    each range end widens by that one tile when the edges say so, which
+    makes the cover hold every tile the refinement can accept.
+    """
+    _reject_staged(df, _TILE_STAGED)
+    z = F.col("__z")
+    size = F.lit(2.0 * MERC_MAX) / F.pow(F.lit(2.0), z)
+    last = F.pow(F.lit(2.0), z).cast("long") - 1
+
+    def xedge(t):
+        return F.lit(-MERC_MAX) + t * size
+
+    def yedge(t):
+        return F.lit(MERC_MAX) - t * size
+
+    minx, miny, maxx, maxy = _box(p)
+    x0, x1 = _tile_index(minx, z), _tile_index(maxx, z)
+    y0, y1 = _tile_index(maxy, z, flip=True), _tile_index(miny, z, flip=True)
+
+    out = df.withColumn(
+        "__z", F.explode(F.array(*[F.lit(int(zz)) for zz in zooms]))
+    )
+    out = out.withColumns({
+        "__ztx0": F.when((x0 > 0) & (minx < xedge(x0)), x0 - 1)
+                   .otherwise(x0),
+        "__ztx1": F.when((x1 < last) & (maxx >= xedge(x1 + 1)), x1 + 1)
+                   .otherwise(x1),
+        "__zty0": F.when((y0 > 0) & (maxy > yedge(y0)), y0 - 1)
+                   .otherwise(y0),
+        "__zty1": F.when((y1 < last) & (miny <= yedge(y1 + 1)), y1 + 1)
+                   .otherwise(y1),
+    })
+    out = out.withColumn("__ztx", F.explode(F.sequence("__ztx0", "__ztx1")))
+    out = out.withColumn("__zty", F.explode(F.sequence("__zty0", "__zty1")))
+
+    tx, ty = F.col("__ztx"), F.col("__zty")
+    tminx, tmaxx = xedge(tx), xedge(tx + 1)
+    tminy, tmaxy = yedge(ty + 1), yedge(ty)
+    bbox = _bbox_names(p)
+    return out.where(refine(tminx, tminy, tmaxx, tmaxy)).select(
+        *[c for c in df.columns if c not in bbox],
+        z.cast("int").alias("zoom"),
+        tx.alias("tile_x"),
+        ty.alias("tile_y"),
+        cell_id_expr(tx, ty, z).alias("tile_id"),
+    )
+
+
 def assign_tiles_bbox(
     df: DataFrame,
     zooms: list[int],
@@ -184,44 +253,21 @@ def assign_tiles_bbox(
 
     One row per (input row, zoom, intersecting tile); outputs the input
     columns other than the five `prefix` bbox columns plus
-    (zoom, tile_x, tile_y, tile_id), exactly like assign_tiles (same keep
-    predicates: point half-open on x / half-open-flipped on y, rect strict
-    overlap; Morton tile_id).  The zoom axis rides ONE explode so multiple
-    zooms still scan the input once.
+    (zoom, tile_x, tile_y, tile_id), exactly like assign_tiles, which
+    routes its point/rect rows here.  Keep predicates: a point belongs to
+    the tile with tminx <= x < tmaxx and tminy < y <= tmaxy, a rect to
+    every tile it overlaps with strictly positive area.
     """
     p = prefix
-    z = F.col("__z")
-    size = F.lit(2.0 * MERC_MAX) / F.pow(F.lit(2.0), z)
 
-    out = df.withColumn(
-        "__z", F.explode(F.array(*[F.lit(int(zz)) for zz in zooms]))
-    )
-    out = out.withColumns({
-        "__ztx0": _tile_index(F.col(f"{p}minx"), z, False),
-        "__ztx1": _tile_index(F.col(f"{p}maxx"), z, False),
-        "__zty0": _tile_index(F.col(f"{p}maxy"), z, True),
-        "__zty1": _tile_index(F.col(f"{p}miny"), z, True),
-    })
-    out = out.withColumn("__ztx", F.explode(F.sequence("__ztx0", "__ztx1")))
-    out = out.withColumn("__zty", F.explode(F.sequence("__zty0", "__zty1")))
+    def keep(tminx, tminy, tmaxx, tmaxy):
+        minx, miny, maxx, maxy = _box(p)
+        return F.when(
+            F.col(f"{p}pt"),
+            (tminx <= minx) & (minx < tmaxx)
+            & (tminy < miny) & (miny <= tmaxy),
+        ).otherwise(
+            (minx < tmaxx) & (maxx > tminx) & (miny < tmaxy) & (maxy > tminy)
+        )
 
-    tminx = F.lit(-MERC_MAX) + F.col("__ztx") * size
-    tmaxx = tminx + size
-    tmaxy = F.lit(MERC_MAX) - F.col("__zty") * size
-    tminy = tmaxy - size
-    px, py = F.col(f"{p}minx"), F.col(f"{p}miny")
-    keep = F.when(
-        F.col(f"{p}pt"),
-        (tminx <= px) & (px < tmaxx) & (tminy < py) & (py <= tmaxy),
-    ).otherwise(
-        (F.col(f"{p}minx") < tmaxx) & (F.col(f"{p}maxx") > tminx)
-        & (F.col(f"{p}miny") < tmaxy) & (F.col(f"{p}maxy") > tminy)
-    )
-    bbox = _bbox_names(p)
-    return out.where(keep).select(
-        *[c for c in df.columns if c not in bbox],
-        z.cast("int").alias("zoom"),
-        F.col("__ztx").alias("tile_x"),
-        F.col("__zty").alias("tile_y"),
-        cell_id_expr(F.col("__ztx"), F.col("__zty"), z).alias("tile_id"),
-    )
+    return _tiles(df, zooms, p, keep)

@@ -27,11 +27,16 @@ from pyspark.sql.pandas.functions import pandas_udf
 from ..kernels import cells as KC
 from ..kernels import geometry as KG
 from ..functions.geo import GEOM_TYPE, geom_to_batch
-from ..functions.cells_fn import (
-    cell_id_expr,
-    make_st_cells_bounds_multi,
+from ..functions.cells_fn import cell_id_expr
+from .bbox_fast import (
+    _bbox_names,
+    _reject_staged,
+    _tiles,
+    assign_tiles_bbox,
+    flat_bbox,
+    is_bbox_shape,
+    point_rect_refinement,
 )
-from .bbox_fast import point_rect_refinement
 
 
 def _is_axis_rect(g, minx=None, maxx=None, miny=None, maxy=None) -> "F.Column":
@@ -587,9 +592,9 @@ def _with_terms(df: DataFrame, geom_col: str, res: int, cap: int,
     # narrow projection chain (bbox -> unit coords -> res_used -> tile
     # range) and the per-cell lambdas read row ATTRIBUTES; Catalyst's
     # CollapseProject keeps multi-referenced non-trivial aliases staged,
-    # so each scalar is evaluated once per row.  Values are bit-exact vs
-    # make_st_cells_terms_expr / the numpy kernels (pinned by
-    # test_mixed_resolution's sweeps).
+    # so each scalar is evaluated once per row.  cov and res_used are
+    # bit-exact vs the numpy kernels (kernels.cells.bbox_cells), anc
+    # set-equal vs cover_ancestors (pinned by test_mixed_resolution).
     #
     # ``keep_bbox``: also emit __bb_minx/__bb_maxx/__bb_miny/__bb_maxy so
     # the caller's per-side shape metadata reuses the staged array scans
@@ -977,9 +982,9 @@ def spatial_intersection_join(
 
         # The sketch must NOT be a second full pass over the exploded
         # candidate stream (the widest intermediate in the job — at 100 TB
-        # that would materialize it twice, cover UDF included).  Sample the
-        # STREAM BEFORE the cover computation: the sample runs the terms
-        # UDF over sketch_sample_frac of the rows only, counts are scaled
+        # that would materialize it twice, cover terms included).  Sample
+        # the STREAM BEFORE the cover computation: the sample builds the
+        # terms over sketch_sample_frac of the rows only, counts are scaled
         # back up, and hot-key detection only needs order-of-magnitude
         # accuracy (a >hot_threshold key still has ~frac*threshold >> 1
         # sampled occurrences).
@@ -1441,103 +1446,32 @@ def assign_tiles(
     df: DataFrame,
     zooms: list[int],
     geom_col: str = "geom",
-    cap: int = 1024,
 ) -> DataFrame:
     """Raster<->vector tile assignment at fixed zoom levels (north rule —
     no reference counterpart, SURVEY §2.7).
 
     A geometry is assigned to every web-mercator XYZ tile it intersects.
     Level-z cells ARE the XYZ tiles (kernels/cells.py), so assignment =
-    cell cover + exact rect refinement.  Output: input columns +
+    bbox tile cover + exact rect refinement.  Output: input columns +
     (zoom:int, tile_x:long, tile_y:long, tile_id:long), one row per
-    (row, tile).
+    (row, tile).  Null or empty geometries get no rows.
 
-    Plan shape (scale-tuned): the input splits FIRST on pure-Catalyst shape
-    flags, so each row pays the cover UDF exactly once; the cover UDF emits
-    all zooms in one pass as flat arrays (struct-of-arrays), exploded with
-    JVM arrays_zip; per-candidate refinement is pure Catalyst for points
-    and axis-rects (dominant shapes), Arrow-batched exact kernels only for
-    general polygons.
+    Plan shape: the geometry projects to flat bbox columns (`flat_bbox`)
+    and the rows split on the pure-Catalyst shape flag.  Both halves take
+    the one integer-range tile cover of operators/bbox_fast.py (pure
+    Catalyst, all zooms in one explode, fan-out = the tiles the bbox
+    spans): points and axis rects through assign_tiles_bbox's closed-form
+    keep predicates, general shapes refined by the Arrow-batched exact
+    kernel `_geom_intersects_rect`.
     """
+    _reject_staged(df, _bbox_names("__b"))
     g = F.col(geom_col)
-    cover = make_st_cells_bounds_multi(list(zooms), cap=cap)
-    is_fast = (g["geom_type"] == "Point") | _is_axis_rect(g)
-
-    def with_candidates(part: DataFrame) -> DataFrame:
-        withc = part.withColumn("__cb", cover(g))
-        cand = withc.withColumn(
-            "__t",
-            F.explode(
-                F.arrays_zip(
-                    F.col("__cb.zoom").alias("zoom"),
-                    F.col("__cb.dres").alias("dres"),
-                    F.col("__cb.minx").alias("minx"),
-                    F.col("__cb.miny").alias("miny"),
-                    F.col("__cb.maxx").alias("maxx"),
-                    F.col("__cb.maxy").alias("maxy"),
-                )
-            ),
-        ).drop("__cb")
-        # A cap-coarsened cover entry (dres > 0) is a level-(z-dres) cell;
-        # expand it into its true zoom-z child tiles HERE, in pure Catalyst
-        # (two bounded sequence explodes + closed-form child bounds), so
-        # emitted rows always sit on the zoom-z grid — never a mislabeled
-        # coarse tile.  Fan-out equals the geometry's real tile count; the
-        # common dres == 0 case degenerates to two singleton explodes.
-        t = F.col("__t")
-        cand = cand.withColumn(
-            "__side", F.pow(F.lit(2.0), t["dres"]).cast("long")
-        )
-        child = F.sequence(F.lit(0).cast("long"), F.col("__side") - 1)
-        cand = cand.withColumn("__dx", F.explode(child))
-        cand = cand.withColumn("__dy", F.explode(child))
-        csize = (t["maxx"] - t["minx"]) / F.col("__side")
-        cminx = t["minx"] + F.col("__dx") * csize
-        cmaxy = t["maxy"] - F.col("__dy") * csize
-        return cand.withColumn(
-            "__t",
-            F.struct(
-                t["zoom"].alias("zoom"),
-                cminx.alias("minx"),
-                (cmaxy - csize).alias("miny"),
-                (cminx + csize).alias("maxx"),
-                cmaxy.alias("maxy"),
-            ),
-        ).drop("__side", "__dx", "__dy")
-
-    t = F.col("__t")
-    px, py = F.element_at(g["x"], 1), F.element_at(g["y"], 1)
-    point_keep = (
-        (t["minx"] <= px) & (px < t["maxx"])
-        & (t["miny"] < py) & (py <= t["maxy"])
-    )
-    rect_keep = (
-        (F.array_min(g["x"]) < t["maxx"]) & (F.array_max(g["x"]) > t["minx"])
-        & (F.array_min(g["y"]) < t["maxy"]) & (F.array_max(g["y"]) > t["miny"])
-    )
-    fast = with_candidates(df.where(is_fast)).where(
-        F.when(g["geom_type"] == "Point", point_keep).otherwise(rect_keep)
-    )
-    slow = with_candidates(df.where(~is_fast)).where(
-        _geom_intersects_rect(g, t["minx"], t["miny"], t["maxx"], t["maxy"])
-    )
-
-    size = t["maxx"] - t["minx"]
-    tx = F.round((t["minx"] + KC.MERC_MAX) / size).cast("long")
-    ty = F.round((KC.MERC_MAX - t["maxy"]) / size).cast("long")
-    outs = [
-        branch.select(
-            *df.columns,
-            t["zoom"].alias("zoom"),
-            tx.alias("tile_x"),
-            ty.alias("tile_y"),
-            # Morton id recomputed JVM-side from the (possibly expanded)
-            # tile coordinates — stays inside whole-stage codegen
-            cell_id_expr(tx, ty, t["zoom"]).alias("tile_id"),
-        )
-        for branch in (fast, slow)
-    ]
-    return outs[0].unionByName(outs[1])
+    flat = flat_bbox(df, geom_col)
+    is_fast = is_bbox_shape(g)
+    fast = assign_tiles_bbox(flat.where(is_fast), zooms, prefix="__b")
+    slow = _tiles(flat.where(~is_fast), zooms, "__b",
+                  lambda *tile: _geom_intersects_rect(g, *tile))
+    return fast.unionByName(slow)
 
 
 @pandas_udf(GEOM_TYPE)

@@ -67,9 +67,7 @@ def cluster_docs_by_cell(
     every data file carries a near-disjoint cell range in the manifest, so
     cell-range probes (and the candidates stage of any cell-keyed join)
     skip whole files (TableCatalog.scan)."""
-    from ..functions.cells_fn import cell_id_expr
     from ..flagship import with_geojson_bbox
-    from ..operators.bbox_fast import _tile_index
 
     # try_element_at: docs without a geometry span cluster on a null cell
     # (range partitioner groups them into the first partition)
@@ -80,12 +78,9 @@ def cluster_docs_by_cell(
     t = with_geojson_bbox(docs.withColumn("__gj", gj))
     cx = (F.col("__bminx") + F.col("__bmaxx")) / F.lit(2.0)
     cy = (F.col("__bminy") + F.col("__bmaxy")) / F.lit(2.0)
-    t = t.withColumn(
-        cell_col,
-        cell_id_expr(_tile_index(cx, res, False),
-                     _tile_index(cy, res, True), F.lit(res)),
-    ).drop("__gj", "__gt", "__fast",
-           "__bminx", "__bminy", "__bmaxx", "__bmaxy", "__bpt")
+    t = t.withColumn(cell_col, st_cell_of_point(cx, cy, res)).drop(
+        "__gj", "__gt", "__fast",
+        "__bminx", "__bminy", "__bmaxx", "__bmaxy", "__bpt")
     n = partitions or docs.sparkSession.sparkContext.defaultParallelism
     return (
         t.repartitionByRange(n, F.col(cell_col))

@@ -3,6 +3,7 @@ no-Python plan guarantees (the flagship's scaling path)."""
 
 import json
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -265,3 +266,120 @@ class TestEquivalenceWithStructOperators:
                         target_per_salt=5)
         assert len(bcast) > 100
         assert bcast == shuf == salted
+
+
+class TestTileCover:
+    """assign_tiles and assign_tiles_bbox share one tile cover, so comparing
+    them only checks the cover against itself; these tests check it against
+    a cover-free oracle."""
+
+    def test_assign_tiles_matches_every_tile_oracle(self, spark):
+        from ndjson_spatial_spark.kernels import cells as KC
+        from ndjson_spatial_spark.operators.spatial import (
+            _geom_intersects_rect,
+        )
+
+        W = KC.MERC_MAX
+        s2 = 2.0 * W / 4      # zoom-2 tile side; its edges are edges at 3, 4
+        e = -W + 3 * s2       # a grid edge at x = W / 2
+        # a zoom-4 edge where the rounded tile index names the tile west
+        # (north) of the one the edges put the point in
+        e4 = -W + 2.0 * W / 16
+        tiny = 1e-12          # below the rounding of x + W: indexes as 0
+        rng = np.random.default_rng(5)
+        line = [[-0.7 * W, -0.6 * W], [0.4 * W, 0.8 * W]]
+        concave_l = [[[0.1 * s2, 0.1 * s2], [1.9 * s2, 0.1 * s2],
+                      [1.9 * s2, 0.8 * s2], [0.8 * s2, 0.8 * s2],
+                      [0.8 * s2, 1.9 * s2], [0.1 * s2, 1.9 * s2],
+                      [0.1 * s2, 0.1 * s2]]]
+        triangle = [[[-0.75 * W, 0.75 * W], [0.75 * W, 0.75 * W],
+                     [-0.75 * W, -0.75 * W], [-0.75 * W, 0.75 * W]]]
+        rows = [
+            ("pt_origin", _gj(0.0, 0.0, 0.0, 0.0, True)),
+            ("pt_edge", _gj(e, -e, e, -e, True)),
+            ("pt_nw_corner", _gj(-W, W, -W, W, True)),
+            ("pt_se_corner", _gj(W, -W, W, -W, True)),
+            ("pt_outside", _gj(2 * W, 0.3 * W, 2 * W, 0.3 * W, True)),
+            ("pt_index_edge", _gj(e4, -e4, e4, -e4, True)),
+            ("pt_near_origin", _gj(-tiny, tiny, -tiny, tiny, True)),
+            ("rect_near_origin", _gj(-tiny, -0.3 * W, 0.2 * W, tiny, False)),
+            ("rect_on_edges", _gj(-e, 0.0, e, e, False)),
+            ("rect_world_edge", _gj(e, -e, W, 0.0, False)),
+            ("rect_overhang", _gj(-1.5 * W, -0.2 * W, -0.6 * W, 0.35 * W,
+                                  False)),
+            ("rect_outside", _gj(1.1 * W, 0.0, 1.4 * W, 0.5 * W, False)),
+            ("concave_l", json.dumps({"type": "Polygon",
+                                      "coordinates": concave_l})),
+            ("triangle", json.dumps({"type": "Polygon",
+                                     "coordinates": triangle})),
+            ("line", json.dumps({"type": "LineString", "coordinates": line})),
+            ("null", None),
+        ]
+        for i in range(6):
+            x0, y0 = (float(v) for v in rng.uniform(-W, 0.8 * W, 2))
+            w, h = (float(v) for v in rng.uniform(0.01 * W, 0.6 * W, 2))
+            rows.append((f"seed_pt{i}", _gj(x0, y0, x0, y0, True)))
+            rows.append((f"seed_rect{i}", _gj(x0, y0, x0 + w, y0 + h, False)))
+        geoms = spark.createDataFrame(rows, "id string, gj string").select(
+            "id", parse_geojson("gj").alias("geom"))
+
+        # the tile grid spec: neighbours share one edge value
+        zooms = [0, 1, 2, 3, 4]
+        grid = []
+        for z in zooms:
+            size = 2.0 * W / (1 << z)
+            for tx in range(1 << z):
+                for ty in range(1 << z):
+                    grid.append((z, tx, ty,
+                                 -W + tx * size, W - (ty + 1) * size,
+                                 -W + (tx + 1) * size, W - ty * size))
+        tiles = spark.createDataFrame(
+            grid, "zoom int, tile_x long, tile_y long, "
+                  "tminx double, tminy double, tmaxx double, tmaxy double")
+        want = sorted(map(tuple, geoms.crossJoin(tiles).where(
+            _geom_intersects_rect(F.col("geom"), F.col("tminx"),
+                                  F.col("tminy"), F.col("tmaxx"),
+                                  F.col("tmaxy"))
+        ).select("id", "zoom", "tile_x", "tile_y").collect()))
+
+        out = assign_tiles(geoms, zooms)
+        assert out.columns == ["id", "geom", "zoom", "tile_x", "tile_y",
+                               "tile_id"]
+        got = out.select("id", "zoom", "tile_x", "tile_y", "tile_id").collect()
+        assert sorted(tuple(r)[:4] for r in got) == want
+        for r in got:
+            assert r["tile_id"] == int(KC.cell_id(
+                np.array([r["tile_x"]]), np.array([r["tile_y"]]),
+                r["zoom"])[0])
+        ids = {r[0] for r in want}
+        assert {"pt_origin", "pt_edge", "pt_nw_corner", "pt_index_edge",
+                "pt_near_origin", "rect_near_origin", "rect_on_edges",
+                "rect_world_edge", "rect_overhang", "concave_l", "triangle",
+                "line"} <= ids
+        assert not ids & {"pt_se_corner", "pt_outside", "rect_outside",
+                          "null"}
+        # the L's notch tile lies inside its bbox but off the shape
+        assert ("concave_l", 3, 6, 1) not in want
+        # the edges, not the rounded index, decide: NW of the origin
+        assert ("pt_near_origin", 1, 0, 0) in want
+        assert ("pt_index_edge", 4, 1, 1) in want
+        assert ("rect_near_origin", 1, 0, 1) in want
+
+    def test_staged_column_names_are_rejected(self, spark):
+        # a caller column named like a staged one used to be silently
+        # replaced by tile data
+        geoms = spark.createDataFrame(
+            [(1, _gj(0.0, 0.0, M, M, False))], "__z int, gj string"
+        ).select("__z", parse_geojson("gj").alias("geom"))
+        with pytest.raises(ValueError, match="__z"):
+            assign_tiles(geoms, [1])
+        with pytest.raises(ValueError, match="__bminx"):
+            assign_tiles(geoms.withColumnRenamed("__z", "__bminx"), [1])
+        flat = _flat(spark, [("a", 0.0, 0.0, M, M, False)])
+        with pytest.raises(ValueError, match="__ztx"):
+            assign_tiles_bbox(flat.withColumn("__ztx", F.lit(1)), [1],
+                              prefix="__b")
+        ref = _flat_ref(spark, [(0.0, 0.0, M, M, False)])
+        with pytest.raises(ValueError, match="__scell"):
+            bbox_intersection_join(flat.withColumn("__scell", F.lit(1)),
+                                   ref, res=8)

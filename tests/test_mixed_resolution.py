@@ -5,8 +5,8 @@ that coarsened rows still meet fine rows in every spatial operator:
 
   - spatial_intersection_join / join_contains: covering+ancestor terms
     (stage 1 must stay a SUPERSET even when one side coarsened);
-  - assign_tiles: coarsened cover entries are expanded into their true
-    zoom-level child tiles (never mislabeled coarse tiles);
+  - assign_tiles: a cover far above any join cap still emits exactly the
+    true zoom-level tiles;
   - nearest_distance: an over-cap re-probe disk falls back to brute force
     instead of joining coarse cells that can never match.
 """
@@ -22,6 +22,7 @@ from ndjson_spatial_spark.functions.geo import parse_geojson, st_area
 from ndjson_spatial_spark.kernels import cells as KC
 from ndjson_spatial_spark.operators.knn import nearest_distance
 from ndjson_spatial_spark.operators.spatial import (
+    _with_terms,
     assign_tiles,
     join_contains,
     spatial_intersection_join,
@@ -129,17 +130,16 @@ class TestCoarsenedContains:
 
 
 class TestCoarsenedTiles:
-    """ADVICE high #2: every emitted row must be a true zoom-z tile even
-    when the cover was cap-coarsened."""
+    """ADVICE high #2: every emitted row must be a true zoom-z tile, however
+    large the cover."""
 
     def test_overcap_polygon_gets_exact_zoom_tiles(self, spark):
-        # tile at zoom 6 is ~6.26M; a 50M-span rect covers 8-9 tiles/axis
-        # (>cap=4) -> cover coarsens, children must be re-expanded
+        # tile at zoom 6 is ~6.26M; a 50M-span rect covers 8 tiles/axis
         z = 6
         tile = 2.0 * KC.MERC_MAX / (1 << z)
         df = geom_df(spark, [("big", gj("Polygon", rect(0.1 * tile, 0.1 * tile,
                                                         7.9 * tile, 7.9 * tile)))])
-        got = assign_tiles(df, [z], cap=4).select("zoom", "tile_x", "tile_y", "tile_id")
+        got = assign_tiles(df, [z]).select("zoom", "tile_x", "tile_y", "tile_id")
         rows = got.collect()
         assert all(r["zoom"] == z for r in rows)
         xs = sorted({r["tile_x"] for r in rows})
@@ -152,17 +152,6 @@ class TestCoarsenedTiles:
         for r in rows:
             assert r["tile_id"] == int(KC.cell_id(
                 np.array([r["tile_x"]]), np.array([r["tile_y"]]), z)[0])
-
-    def test_expansion_matches_uncapped_cover(self, spark):
-        z = 6
-        tile = 2.0 * KC.MERC_MAX / (1 << z)
-        df = geom_df(spark, [("big", gj("Polygon", rect(-3.2 * tile, -2.1 * tile,
-                                                        4.4 * tile, 5.3 * tile)))])
-        capped = {(r["tile_x"], r["tile_y"]) for r in
-                  assign_tiles(df, [z], cap=4).collect()}
-        free = {(r["tile_x"], r["tile_y"]) for r in
-                assign_tiles(df, [z], cap=100000).collect()}
-        assert capped == free
 
     def test_st_cell_of_point_expr_matches_kernel(self, spark):
         # round-6: st_cell_of_point became pure Catalyst; it must stay
@@ -192,13 +181,10 @@ class TestCoarsenedTiles:
             want = [int(v) for v in KC.point_cells(xs, ys, res)]
             assert got == want, res
 
-    def test_st_cells_terms_expr_matches_udf(self, spark):
-        # round-6: the join-term generator became pure Catalyst; cov and
-        # res_used must stay bit-exact vs the pandas-UDF/kernel form and
-        # anc set-equal (enumeration order is not observed by any consumer)
-        from ndjson_spatial_spark.functions.cells_fn import (
-            make_st_cells_terms, make_st_cells_terms_expr)
-
+    def test_with_terms_matches_kernel(self, spark):
+        # the join terms spatial_intersection_join runs (pure Catalyst):
+        # cov and res_used must stay bit-exact vs the numpy kernels and anc
+        # set-equal (enumeration order is not observed by any consumer)
         rng = np.random.default_rng(11)
         rows = []
         for i in range(60):
@@ -214,24 +200,31 @@ class TestCoarsenedTiles:
                                                  KC.MERC_MAX, KC.MERC_MAX))))
         rows.append(("null", None))
         df = geom_df(spark, rows)
-        res, cap = 12, 64
+        res, cap, min_res = 12, 64, 6
         anc_levels = range(6, 12)
-        udf = make_st_cells_terms(res, cap=cap, min_res=6,
-                                  anc_levels=anc_levels)
-        expr = make_st_cells_terms_expr(res, cap=cap, min_res=6,
-                                        anc_levels=anc_levels)
-        got = {r["id"]: r for r in df.select(
-            "id", expr(F.col("geom")).alias("t")).collect()}
-        want = {r["id"]: r for r in df.select(
-            "id", udf(F.col("geom")).alias("t")).collect()}
-        assert set(got) == set(want)
-        for k in want:
-            w, g = want[k]["t"], got[k]["t"]
-            assert g["res_used"] == w["res_used"], k
-            assert g["cov"] == w["cov"], k
-            wa = sorted(w["anc"]) if w["anc"] is not None else None
-            ga = sorted(g["anc"]) if g["anc"] is not None else None
-            assert ga == wa, k
+        got = {r["id"]: r for r in _with_terms(
+            df, "geom", res, cap, min_res, anc_levels).collect()}
+        assert len(got) == len(rows) == 82
+
+        valid = sorted(k for k, r in got.items()
+                       if r["geom"] is not None and r["geom"]["x"])
+        assert "null" not in valid and len(valid) == 81
+        bb = np.array([(min(got[k]["geom"]["x"]), min(got[k]["geom"]["y"]),
+                        max(got[k]["geom"]["x"]), max(got[k]["geom"]["y"]))
+                       for k in valid])
+        covers, res_used = KC.bbox_cells(bb[:, 0], bb[:, 1], bb[:, 2],
+                                         bb[:, 3], res, cap=cap,
+                                         min_res=min_res)
+        ancs = KC.cover_ancestors(covers, res_used, anc_levels)
+        for k, cov, ru, anc in zip(valid, covers, res_used, ancs):
+            g = got[k]
+            assert g["__res_used"] == int(ru), k
+            assert g["__cov"] == [int(c) for c in cov], k
+            assert sorted(g["__anc"]) == sorted(int(c) for c in anc), k
+        # invalid row: null terms at the requested resolution
+        assert got["null"]["__cov"] is None
+        assert got["null"]["__anc"] is None
+        assert got["null"]["__res_used"] == res
 
     def test_cell_id_expr_matches_kernel(self, spark):
         rng = np.random.default_rng(3)
