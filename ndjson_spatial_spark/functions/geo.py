@@ -1178,11 +1178,26 @@ def explode_collections(df: DataFrame, geom_col: str = "geom") -> DataFrame:
     `gc_members_expr` — one scan, zero Python, whole-stage codegen
     (replaces the round-2 filter-split-union shape, which read the source
     twice at scale)."""
-    tag = F.col(geom_col)["geom_type"]
-    is_gc = tag.isNotNull() & tag.startswith("GeometryCollection:")
-    arr = F.when(is_gc, gc_members_expr(F.col(geom_col))) \
-        .otherwise(F.array(F.col(geom_col)))
-    return df.withColumn(geom_col, F.explode(arr))
+    return df.withColumn(geom_col, _members_explode(geom_col))
+
+
+def _members_explode(geom_col: str):
+    """explode(members-or-self) of `geom_col`, memoized per column name:
+    Columns are immutable name-resolved trees, and the member lambdas cost
+    ~0.05 s of py4j round trips per build otherwise."""
+    got = _MEMBERS_EXPLODE.get(geom_col)
+    if got is None:
+        tag = F.col(geom_col)["geom_type"]
+        is_gc = tag.isNotNull() & tag.startswith("GeometryCollection:")
+        got = F.explode(F.when(is_gc, gc_members_expr(F.col(geom_col)))
+                        .otherwise(F.array(F.col(geom_col))))
+        if len(_MEMBERS_EXPLODE) >= 64:
+            _MEMBERS_EXPLODE.clear()
+        _MEMBERS_EXPLODE[geom_col] = got
+    return got
+
+
+_MEMBERS_EXPLODE: dict = {}
 
 
 def st_point(x_col, y_col):

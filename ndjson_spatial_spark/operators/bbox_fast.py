@@ -111,10 +111,10 @@ def point_rect_refinement(s_pt, r_pt, s_box, r_box) -> tuple:
     return keep, ibox
 
 
-def _reject_staged(df: DataFrame, staged) -> None:
-    """Raise if an input column has a name the operator stages: the staged
+def _reject_staged(columns, staged) -> None:
+    """Raise if an input column name is one the operator stages: the staged
     column would silently replace the caller's data."""
-    for c in df.columns:
+    for c in columns:
         if c in staged:
             raise ValueError(
                 f"input column {c!r} collides with a column name the "
@@ -125,7 +125,7 @@ def _with_cover(df: DataFrame, res: int, p: str, cp: str) -> DataFrame:
     """Explode the integer cover ranges of the bbox (prefix `p`) at `res`:
     adds {cp}tx0/{cp}ty0 (range starts, used by the pair-dedup rule), the
     exploded {cp}tx/{cp}ty, and the Morton {cp}cell."""
-    _reject_staged(df, [f"{cp}{c}" for c in
+    _reject_staged(df.columns, [f"{cp}{c}" for c in
                         ("tx0", "tx1", "ty0", "ty1", "tx", "ty", "cell")])
     out = df.withColumns({
         f"{cp}tx0": _tile_index(F.col(f"{p}minx"), res),
@@ -200,7 +200,7 @@ def _tiles(df: DataFrame, zooms, p: str, refine) -> DataFrame:
     each range end widens by that one tile when the edges say so, which
     makes the cover hold every tile the refinement can accept.
     """
-    _reject_staged(df, _TILE_STAGED)
+    _reject_staged(df.columns, _TILE_STAGED)
     z = F.col("__z")
     size = F.lit(2.0 * MERC_MAX) / F.pow(F.lit(2.0), z)
     last = F.pow(F.lit(2.0), z).cast("long") - 1

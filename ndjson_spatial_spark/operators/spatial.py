@@ -579,7 +579,24 @@ def _term_anc(c):
 
 
 def _with_terms(df: DataFrame, geom_col: str, res: int, cap: int,
-                min_res: int, anc_levels, keep_bbox: bool = False) -> DataFrame:
+                min_res: int, anc_levels, prefix: str = "__",
+                side: str | None = None, levels=None) -> DataFrame:
+    """`df` plus the join terms of `geom_col`: {prefix}cov (the cover
+    cells), {prefix}anc (their ancestors at `anc_levels`) and
+    {prefix}res_used (the cover's resolution after cap-coarsening).
+
+    ``levels``: an array<int> Column, the ancestor levels to use instead
+    of `anc_levels` (the join passes the coarse ref levels as a scalar
+    subquery).
+
+    ``side``: also emit the shape metadata the refinement reads, as one
+    array<double> column __{side}_meta = [kind, minx, miny, maxx, maxy]:
+    kind 0 point, 1 axis rect, 2 other (a null geometry too), and the bbox
+    this projection chain stages anyway.  It is computed per SIDE row, not
+    per candidate pair (the rect test runs two interpreted `forall`
+    lambdas).  It is ONE column so that every refinement route reads the
+    same stream columns: column pruning then leaves the routes' stream
+    inputs identical, and they share one exchange."""
     # round-6: pure-Catalyst terms (guide §4.1) — the pandas-UDF form
     # shipped every geometry struct JVM->Python->JVM on BOTH sides of
     # every spatial join just to compute ~a dozen longs per row.
@@ -595,63 +612,80 @@ def _with_terms(df: DataFrame, geom_col: str, res: int, cap: int,
     # so each scalar is evaluated once per row.  cov and res_used are
     # bit-exact vs the numpy kernels (kernels.cells.bbox_cells), anc
     # set-equal vs cover_ancestors (pinned by test_mixed_resolution).
-    #
-    # ``keep_bbox``: also emit __bb_minx/__bb_maxx/__bb_miny/__bb_maxy so
-    # the caller's per-side shape metadata reuses the staged array scans
-    # instead of recomputing them (spatial_intersection_join does).
     c = _terms_cols(geom_col, res, cap, min_res,
-                    tuple(sorted({int(l) for l in anc_levels})))
+                    tuple(sorted({int(l) for l in anc_levels})),
+                    levels is not None)
     base = list(df.columns)
-    st = df.select("*", *c["bbox"])
+    gate = [] if levels is None else [levels.alias("__lv")]
+    st = df.select("*", *c["bbox"], *gate)
     st = st.select("*", *c["uv"])
     st = st.select("*", c["ru"])
     st = st.select("*", *c["tiles"])
-    keep = base + (["__bb_minx", "__bb_maxx", "__bb_miny", "__bb_maxy"]
-                   if keep_bbox else [])
-    return st.select(*keep, *c["out"])
+    out = [c[n].alias(f"{prefix}{n}") for n in ("cov", "anc", "res_used")]
+    if side is not None:
+        out.append(c["meta"].alias(f"__{side}_meta"))
+    return st.select(*base, *out)
+
+
+#: the columns `_with_terms` stages before its final projection
+_TERMS_STAGED = ("__bb_minx", "__bb_maxx", "__bb_miny", "__bb_maxy",
+                 "__u0", "__v0", "__u1", "__v1", "__ru",
+                 "__tx0", "__tx1", "__ty0", "__ty1", "__lv")
 
 
 def _terms_cols(geom_col: str, res: int, cap: int, min_res: int,
-                anc_levels: tuple) -> dict:
+                anc_levels: tuple, gated: bool) -> dict:
     """The staged-terms Column bundle, memoized per (geom_col, res, cap,
-    min_res, anc_levels) — Columns are immutable name-resolved trees, and
-    building the per-cell Morton lambdas costs ~1 s of py4j round trips
-    per spatial-join construction otherwise."""
-    from ..functions.cells_fn import _unit_u_expr, _unit_v_expr
-
-    key = (geom_col, res, cap, min_res, anc_levels)
+    min_res, anc_levels, gated) — Columns are immutable name-resolved
+    trees, and building the per-cell Morton lambdas costs ~1 s of py4j
+    round trips per spatial-join construction otherwise."""
+    key = (geom_col, res, cap, min_res, anc_levels, gated)
     got = _TERMS_COLS_CACHE.get(key)
     if got is not None:
         return got
-    g = F.col(geom_col)
-    bbox = [
-        F.array_min(g["x"]).alias("__bb_minx"),
-        F.array_max(g["x"]).alias("__bb_maxx"),
-        F.array_min(g["y"]).alias("__bb_miny"),
-        F.array_max(g["y"]).alias("__bb_maxy"),
-    ]
     # everything below the bbox stage references only the staged column
     # NAMES, so the (large) cov/anc/ru trees are shared across geometry
-    # columns — a second geom_col only rebuilds the two cheap stages
-    core_key = (res, cap, min_res, anc_levels)
-    core = _TERMS_CORE_CACHE.get(core_key)
-    if core is not None:
-        valid = g["x"].isNotNull() & (F.size(g["x"]) > 0)
-        na = F.lit(None).cast("array<long>")
-        cols = {
-            "bbox": bbox, "uv": core["uv"], "ru": core["ru"],
-            "tiles": core["tiles"],
-            "out": [
-                F.when(valid, core["cov"]).otherwise(na).alias("__cov"),
-                F.when(valid, core["anc"]).otherwise(na).alias("__anc"),
-                F.when(valid, F.col("__ru")).otherwise(F.lit(res))
-                .cast("int").alias("__res_used"),
-            ],
-        }
-        if len(_TERMS_COLS_CACHE) >= 256:
-            _TERMS_COLS_CACHE.clear()
-        _TERMS_COLS_CACHE[key] = cols
-        return cols
+    # columns — a second geom_col only rebuilds the cheap outer stages
+    core = _terms_core(res, cap, min_res, anc_levels, gated)
+    g = F.col(geom_col)
+    bb = [F.col(c) for c in
+          ("__bb_minx", "__bb_maxx", "__bb_miny", "__bb_maxy")]
+    valid = g["x"].isNotNull() & (F.size(g["x"]) > 0)
+    na = F.lit(None).cast("array<long>")
+    cols = {
+        "bbox": [
+            F.array_min(g["x"]).alias("__bb_minx"),
+            F.array_max(g["x"]).alias("__bb_maxx"),
+            F.array_min(g["y"]).alias("__bb_miny"),
+            F.array_max(g["y"]).alias("__bb_maxy"),
+        ],
+        "uv": core["uv"], "ru": core["ru"], "tiles": core["tiles"],
+        "cov": F.when(valid, core["cov"]).otherwise(na),
+        "anc": F.when(valid, core["anc"]).otherwise(na),
+        "res_used": F.when(valid, F.col("__ru")).otherwise(F.lit(res))
+        .cast("int"),
+        # [kind, minx, miny, maxx, maxy]; the rect test compares against
+        # the staged bbox attributes
+        "meta": F.array(
+            F.when(g["geom_type"] == "Point", 0.0)
+            .when(_is_axis_rect(g, *bb), 1.0).otherwise(2.0),
+            bb[0], bb[2], bb[1], bb[3]),
+    }
+    if len(_TERMS_COLS_CACHE) >= 256:
+        _TERMS_COLS_CACHE.clear()
+    _TERMS_COLS_CACHE[key] = cols
+    return cols
+
+
+def _terms_core(res: int, cap: int, min_res: int, anc_levels: tuple,
+                gated: bool) -> dict:
+    """The geometry-independent stages of `_terms_cols`, memoized."""
+    from ..functions.cells_fn import _unit_u_expr, _unit_v_expr
+
+    key = (res, cap, min_res, anc_levels, gated)
+    got = _TERMS_CORE_CACHE.get(key)
+    if got is not None:
+        return got
     uv = [
         _unit_u_expr(F.col("__bb_minx")).alias("__u0"),
         _unit_v_expr(F.col("__bb_maxy")).alias("__v0"),
@@ -692,45 +726,33 @@ def _terms_cols(geom_col: str, res: int, cap: int, min_res: int,
             F.sequence(F.col("__tx0"), F.col("__tx1")),
             lambda dx: cell_id_expr(dx, dy, F.col("__ru")))))
 
-    if anc_levels:
-        def cells_at_level(lv):
-            lc = F.lit(int(lv))
-            atx0, atx1, aty0, aty1 = rng(lc)
-            return F.transform(
-                F.sequence(aty0, aty1),
-                lambda dy: F.transform(
-                    F.sequence(atx0, atx1),
-                    lambda dx: cell_id_expr(dx, dy, lc)))
+    # ancestors: the cover's cells at every level of `anc_levels` (or of
+    # the staged __lv) strictly coarser than the cover — ONE lambda over
+    # the levels, whatever their count
+    def cells_at_level(lv):
+        atx0, atx1, aty0, aty1 = rng(lv)
+        return F.flatten(F.transform(
+            F.sequence(aty0, aty1),
+            lambda dy: F.transform(
+                F.sequence(atx0, atx1),
+                lambda dx: cell_id_expr(dx, dy, lv))))
 
-        anc = F.flatten(F.concat(*[
-            F.when(F.lit(int(lv)) < F.col("__ru"), cells_at_level(lv))
-            .otherwise(F.array().cast("array<array<long>>"))
-            for lv in anc_levels
-        ]))
+    if gated:
+        lvs = F.col("__lv")
+    elif anc_levels:
+        lvs = F.array(*[F.lit(int(lv)) for lv in anc_levels])
+    if gated or anc_levels:
+        anc = F.flatten(F.transform(
+            F.filter(lvs, lambda lv: lv < F.col("__ru")), cells_at_level))
     else:
         anc = F.array().cast("array<long>")
 
+    core = {"uv": uv, "ru": ru.alias("__ru"), "tiles": tiles,
+            "cov": cov, "anc": anc}
     if len(_TERMS_CORE_CACHE) >= 256:
         _TERMS_CORE_CACHE.clear()
-    _TERMS_CORE_CACHE[core_key] = {
-        "uv": uv, "ru": ru.alias("__ru"), "tiles": tiles,
-        "cov": cov, "anc": anc,
-    }
-    valid = g["x"].isNotNull() & (F.size(g["x"]) > 0)
-    na = F.lit(None).cast("array<long>")
-    cols = {
-        "bbox": bbox, "uv": uv, "ru": ru.alias("__ru"), "tiles": tiles,
-        "out": [
-            F.when(valid, cov).otherwise(na).alias("__cov"),
-            F.when(valid, anc).otherwise(na).alias("__anc"),
-            F.when(valid, F.col("__ru")).otherwise(F.lit(res)).cast("int")
-            .alias("__res_used"),
-        ],
-    }
-    if len(_TERMS_COLS_CACHE) >= 256:
-        _TERMS_COLS_CACHE.clear()
-    _TERMS_COLS_CACHE[key] = cols
-    return cols
+    _TERMS_CORE_CACHE[key] = core
+    return core
 
 
 _TERMS_COLS_CACHE: dict = {}
@@ -752,6 +774,15 @@ def _coarse_levels(df_terms: DataFrame, res: int) -> list:
 
 
 # --------------------------------------------------------- intersection
+
+#: the names spatial_intersection_join stages beside the caller's columns:
+#: both sides' staged terms, metadata and join columns meet in one row, so
+#: none may name a stream column or a kept ref column
+_JOIN_STAGED = _TERMS_STAGED + (
+    "__cov", "__anc", "__res_used", "__s_meta",
+    "__ref_geom", "__ref_cov", "__ref_anc", "__ref_res_used", "__r_meta",
+    "__term")
+
 
 def spatial_intersection_join(
     stream: DataFrame,
@@ -782,18 +813,32 @@ def spatial_intersection_join(
     where the consumer needs to know WHICH ref feature matched.  The
     columns ride the same broadcast/salted candidate rows and the same
     refinement batches — zero extra shuffles; names must not collide with
-    stream columns.
+    stream columns.  Neither they nor the stream's columns may carry a
+    name the operator stages (`_JOIN_STAGED`, plus `__salt` when salting):
+    that raises ValueError.
 
-    Plan shape: explode cell-cover TERMS both sides -> equi-join on the
-    term id (broadcast when ref is small, like the reference's in-memory
-    R-tree build side; hash-partitioned otherwise) -> pair dedup via the
-    MIN-COMMON-TERM rule -> Arrow-batched exact refinement.  Terms =
-    cover cells + ancestor cells (covering+ancestor-terms scheme, see the
-    module-level comment above `_term_anc`), so rows whose covers were
-    cap-coarsened to a different resolution still meet — stage 1 stays a
-    strict SUPERSET at any mix of per-row resolutions down to `min_res`
-    (default res-6; coarsening is clamped there, trading a possibly
-    over-`cap` cover for never losing candidates).
+    Plan shape: explode cell-cover TERMS on both sides -> ONE term
+    equi-join (the ref broadcast when `broadcast_ref`, like the reference's
+    in-memory R-tree build side; otherwise partitioned on the term, salted
+    on (term, salt) with `salt_hot_cells`) -> pair dedup via the
+    MIN-COMMON-TERM rule -> refinement routed per pair: point/rect pairs
+    through pure-Catalyst interval arithmetic, every other pair through
+    the Arrow-batched exact kernels.  The two routes join the same stream
+    terms — on the shuffle paths the stream is scanned, termed and
+    scattered into one exchange that both read — and differ only in the
+    ref rows they take; on point/rect input to a partitioned join the
+    general route's ref side is empty and adaptive execution drops the
+    route before any Python worker starts.  Building the plan runs no
+    Spark job: its data-dependent decisions (the coarse ref levels that
+    need stream ancestor terms and, on the partitioned paths, whether any
+    stream row is general) are scalar subqueries that run with the query.
+
+    Terms = cover cells + ancestor cells (covering+ancestor-terms scheme,
+    see the module-level comment above `_term_anc`), so rows whose covers
+    were cap-coarsened to a different resolution still meet — stage 1
+    stays a strict SUPERSET at any mix of per-row resolutions down to
+    `min_res` (default res-6; coarsening is clamped there, trading a
+    possibly over-`cap` cover for never losing candidates).
 
     Pair dedup without a shuffle: a (stream, ref) pair meets once per
     SHARED term; instead of dropDuplicates (an extra shuffle whose
@@ -804,6 +849,11 @@ def spatial_intersection_join(
     broadcast case the whole candidates+refinement path is shuffle-free
     (narrow over the stream's partitioning).
     """
+    salted = salt_hot_cells and not broadcast_ref
+    staged = _JOIN_STAGED + (("__salt",) if salted else ())
+    s_cols = stream.columns
+    _reject_staged(s_cols, staged)
+    _reject_staged(keep_ref_cols, staged)
     # GeometryCollections auto-explode to member rows on BOTH sides
     # (round-4): the overlay kernel operates on simple geometries (GC ->
     # null, which would silently drop data).  `gc_members_expr` is pure
@@ -829,146 +879,40 @@ def spatial_intersection_join(
     # core.  A production table has plenty of splits, so this guard only
     # fires for under-split inputs.  (Streaming plans expose no .rdd —
     # micro-batch partitioning is the source's concern there.)
-    if not stream.isStreaming:
+    streaming = stream.isStreaming
+    if not streaming:
         par = stream.sparkSession.sparkContext.defaultParallelism
         if stream.rdd.getNumPartitions() < min(par, 8):
             stream = stream.repartition(par)
 
-    # ref side emits: its cover terms both plain and ancestor-tagged (the
-    # tagged copy is what a fine stream row's ancestor terms meet when the
-    # REF row coarsened) + its cover's ancestors, plain, at every level
-    # coarsening can reach (what a coarsened STREAM row's cover meets).
+    # ref side emits: its cover terms + its cover's ancestors, plain, at
+    # every level coarsening can reach (what a coarsened STREAM row's cover
+    # meets) + for a coarsened row its cover ancestor-tagged (what a fine
+    # stream row's ancestor terms meet).  Each side is ONE projection
+    # chain: terms, shape kind and bbox.
+    c = _join_cols(geom_col, res)
     r_t = _with_terms(
         ref.select(F.col(geom_col).alias("__ref_geom"), *keep_ref_cols),
-        "__ref_geom",
-        res, cap, min_res, range(min_res, res), keep_bbox=True,
-    ).withColumnsRenamed({
-        "__cov": "__ref_cov", "__anc": "__ref_anc",
-        "__res_used": "__ref_res_used",
-    })
-
-    # ---- per-SIDE shape metadata (round-6, guide §2.3: project before
-    # the exchange).  The refinement below needs, per candidate pair, the
-    # shape class (point / axis-rect / other) and the bbox of each side.
-    # Computing those on the JOINED rows evaluated `_is_axis_rect` (two
-    # interpreted `forall` HOFs) plus four array_min/max per side PER
-    # CANDIDATE — at ~200 candidates per input row that is 200x the
-    # necessary work.  One narrow projection per side (5 scalar columns,
-    # 40 bytes) rides the explode + join instead; for Points the bbox
-    # degenerates to the point, so the fast-path predicates below need no
-    # element_at.  kind codes: 0 = point, 1 = axis rect, 2 = other
-    # (null geometry classifies 2 -> slow path, as before).
-    def _side_meta(df, gcol, p):
-        # round-6b: the bbox columns are the ones _with_terms already
-        # staged (keep_bbox=True) — renamed, not recomputed; the rect test
-        # compares against them as attributes
-        g = F.col(gcol)
-        bb = [F.col(c) for c in
-              ("__bb_minx", "__bb_maxx", "__bb_miny", "__bb_maxy")]
-        return df.withColumns({
-            f"__{p}_kind": F.when(g["geom_type"] == "Point", 0)
-            .when(_is_axis_rect(g, bb[0], bb[1], bb[2], bb[3]), 1)
-            .otherwise(2),
-        }).withColumnsRenamed({
-            "__bb_minx": f"__{p}_minx", "__bb_maxx": f"__{p}_maxx",
-            "__bb_miny": f"__{p}_miny", "__bb_maxy": f"__{p}_maxy",
-        })
-
-    r_t = _side_meta(r_t, "__ref_geom", "r")
-    # round-6b: materialize the ref terms frame ONCE.  The ref side (the
-    # reference's in-memory R-tree build side) otherwise re-evaluates its
-    # geometry parse + cover computation per CONSUMER: the coarse-levels
-    # probe plus one evaluation per per-kind sub-join exchange/broadcast
-    # — 3-4x per query.  The checkpoint is private to this invocation
-    # (freed on GC, nothing survives across runs) and holds one row per
-    # ref feature: geometry, covers, 5 metadata scalars.  Streaming refs
-    # skip it (no checkpoint on streaming plans).
-    if not ref.isStreaming:
-        r_t = r_t.localCheckpoint()
-
-    # stream ancestors are only needed at levels where some REF row actually
-    # coarsened — usually none (plan-time constant from a tiny distinct agg
-    # over the checkpointed ref terms).
-    r_levels = _coarse_levels(
-        r_t.select(F.col("__ref_res_used").alias("__res_used")), res
+        "__ref_geom", res, cap, min_res, range(min_res, res),
+        prefix="__ref_", side="r",
     )
-    s_t = _with_terms(stream, geom_col, res, cap, min_res, r_levels,
-                      keep_bbox=True)
-    s_t = _side_meta(s_t, geom_col, "s")
+    # stream ancestors are only needed at levels where some REF row
+    # actually coarsened — usually none.  The distinct coarse ref levels
+    # are a scalar subquery, so the plan decides this at execution.
+    levels = (
+        r_t.where(F.col("__ref_res_used") < res)
+        .agg(F.collect_set("__ref_res_used")).scalar()
+    )
+    s_t = _with_terms(stream, geom_col, res, cap, min_res, (), side="s",
+                      levels=levels)
+    # each explode reads the staged term attributes, never a term
+    # expression over the geometry (see the InferFiltersFromGenerate note
+    # in session.py)
+    s_c = s_t.withColumn("__term", c["s_term"])
+    r_c = r_t.withColumn("__term", c["r_term"])
 
-    # term emission (see module comment): matches enumerate each candidate
-    # pair once per SHARED term —
-    #   s.cov(plain)  == r.cov(plain)   same-res candidates (the hot path)
-    #   s.cov(plain)  == r.anc(plain)   stream coarsened, ref fine
-    #   s.anc(tagged) == r.cov(tagged)  ref coarsened, stream fine
-    # and never anc == anc (stream cov is never tagged, ref anc never plain).
-    # The tagged cover copy is only emitted for COARSENED ref rows — a fine
-    # row's tagged cells sit at `res` where no stream ancestor ever is, so
-    # skipping them halves the ref-side term fan-out in the common case.
-    s_terms = F.concat(F.col("__cov"), F.transform("__anc", _term_anc))
-    # The coarsened-ref decision is made at PLAN time, not per row: a
-    # per-row `when(res_used < res, ...)` branch inside the generator input
-    # trips a Catalyst nested-column-aliasing bug under Generate
-    # (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND on the ref geometry's extracted
-    # struct fields).  `r_levels` is already a plan-time constant: when it
-    # is empty (the common case) the stream emits no ancestor terms at all,
-    # so tagged ref copies could never match — skip them.  When some ref
-    # row did coarsen, emit the tagged copy for EVERY ref row: a fine row's
-    # tagged cells sit at `res` where no stream ancestor term ever is
-    # (ancestors are strictly coarser), so the extra terms cannot match —
-    # they only cost fan-out in the already-uncommon mixed-res case.
-    if r_levels:
-        r_terms = F.concat(
-            F.col("__ref_cov"),
-            F.transform("__ref_cov", _term_anc),
-            F.col("__ref_anc"),
-        )
-    else:
-        r_terms = F.concat(F.col("__ref_cov"), F.col("__ref_anc"))
-    # round-6b: explode an ATTRIBUTE, not the term expression itself —
-    # Catalyst's InferFiltersFromGenerate adds a `size(gen) > 0` filter
-    # below every explode, and with the expression inline that filter
-    # re-evaluated the ENTIRE terms computation (geometry parse UDF
-    # included) once more per row; staged as a column, the inferred
-    # filter tests a cheap attribute and the terms run once.
-    s_c = s_t.withColumn("__term", F.explode(s_terms))
-    r_c = r_t.withColumn("__term", F.explode(r_terms))
-
-    # round-6b: split each SIDE by shape kind BEFORE the join.  The
-    # fast/slow refinement split below previously filtered the JOINED
-    # candidates twice, so the candidate join (the widest stage of the
-    # query) executed once per branch — only its shuffle write was
-    # reused.  Pairs partition disjointly by (stream kind, ref kind):
-    # the all-fast join runs exactly once, and the three sub-joins that
-    # involve a general-shape side are EMPTY whenever the corpus is all
-    # points/rects (their inputs are subset filters whose exchanges are
-    # shared across sub-joins, and AQE collapses the empty ones).
-    s_f = s_c.where(F.col("__s_kind") < 2)
-    s_s = s_c.where(F.col("__s_kind") == 2)
-    r_f = r_c.where(F.col("__r_kind") < 2)
-    r_s = r_c.where(F.col("__r_kind") == 2)
-
-    # exactly-once pair dedup: keep the match whose join term is the
-    # smallest ENUMERATED shared term (the three disjoint sets above).
-    # Round-6 short-circuit: a stream row with exactly ONE term (a point's
-    # single level-res cell, no ancestors — the dominant point-stream
-    # shape) can meet a given ref row at most once, because the ref side's
-    # enumerated terms (cov + distinct-level ancestors) are pairwise
-    # distinct — so the pair is trivially unique and the per-candidate
-    # array_intersect/array_min work is skipped (Or short-circuits in
-    # codegen; on the 7M-candidate salted bench every candidate takes the
-    # cheap branch).
-    min_common = F.array_min(F.concat(
-        F.array_intersect("__cov", "__ref_cov"),
-        F.array_intersect("__cov", "__ref_anc"),
-        F.transform(F.array_intersect("__anc", "__ref_cov"), _term_anc),
-    ))
-    single_term = (F.size("__cov") == 1) & (F.size("__anc") == 0)
-    drop_cols = ["__term", "__cov", "__anc", "__res_used",
-                 "__ref_cov", "__ref_anc", "__ref_res_used"]
-    # the salt map of the hot cell terms, or None for a plain term join
-    salt = None
-    if salt_hot_cells and not broadcast_ref:
+    keys = ["__term"]
+    if salted:
         # 100 TB path: hash-partitioned cell join with EXPLICIT hot-cell
         # salting (north rule) layered over AQE's skew splitting — geographic
         # cell frequencies are Zipfian, so a handful of city cells would
@@ -991,93 +935,147 @@ def spatial_intersection_join(
         if sketch_sample_frac and sketch_sample_frac < 1.0:
             sk_t = _with_terms(
                 stream.select(geom_col).sample(sketch_sample_frac, seed=42),
-                geom_col, res, cap, min_res, r_levels,
+                geom_col, res, cap, min_res, (), levels=levels,
             )
             freq = (
-                sk_t.select(F.explode(s_terms).alias("__term"))
+                sk_t.select(c["s_term"].alias("__term"))
                 .groupBy("__term")
                 .agg((F.count(F.lit(1)) / F.lit(sketch_sample_frac))
                      .cast("long").alias("key_count"))
             )
         else:
             freq = key_frequency_sketch(s_c.select("__term"), "__term")
-        # the salt plan (hot keys only — tiny by construction) feeds the
-        # per-kind sub-joins; persist so the sketch runs once
+        # the salt map (hot keys only — tiny by construction) is read by
+        # the scatter and the replicate; persist so the sketch runs once.
+        # With no hot key every row gets salt 0.
         plan = salt_plan(freq, "__term", hot_threshold, target_per_salt) \
             .persist()
-        # round-6b: when the sketch finds NO hot keys (the common
-        # non-Zipfian or small-input case) the whole scatter/replicate
-        # apparatus — two broadcast joins, a per-row rand, a Generate on
-        # the build side — would salt everything with the constant 0,
-        # i.e. reproduce the plain term join at pure overhead.  The
-        # emptiness probe materializes the (persisted) plan the broadcast
-        # would have materialized anyway, so detection costs nothing
-        # extra, and hot inputs take the salted branch exactly as before.
-        if not plan.isEmpty():
-            salt = plan
+        s_c = apply_salt_scatter(s_c, "__term", plan)
+        r_c = apply_salt_replicate(r_c, "__term", plan)
+        keys.append("__salt")
 
-    def cand_of(ssub, rsub):
-        """Deduplicated candidate pairs of one (stream kind, ref kind)
-        sub-join: salted on (term, salt) when the sketch found hot terms,
-        else a plain term equi-join (ref broadcast when `broadcast_ref`)."""
-        if salt is not None:
-            sj = apply_salt_scatter(ssub, "__term", salt)
-            rj = apply_salt_replicate(rsub, "__term", salt)
-            j = sj.join(rj, ["__term", "__salt"], "inner").drop("__salt")
-            term = F.col("__term")
-        else:
-            r = rsub.alias("r")
-            j = ssub.alias("s").join(
-                F.broadcast(r) if broadcast_ref else r,
-                F.col("s.__term") == F.col("r.__term"), "inner")
-            term = F.col("s.__term")
-        return j.where(single_term | (term == min_common)).drop(*drop_cols)
+    # ---- refinement, routed per pair after the dedup (see `_join_cols`).
+    # Each route narrows only its REF side: point/rect refs for the
+    # point/rect route; for the general route the general refs, plus every
+    # ref when some stream row is general.  On the partitioned paths that
+    # probe is a scalar subquery that stops at the first general stream
+    # row, and it runs beside the stream's own stage.  On point/rect input
+    # the general route's ref side is then empty, and adaptive execution
+    # drops the route before any Python worker starts.  A broadcast join's
+    # stream side runs in the final stage, so there the probe would only
+    # delay every query (and a streaming source cannot feed a subquery):
+    # every ref takes the general route too.
+    s_general = F.lit(True) if broadcast_ref or streaming else F.coalesce(
+        s_t.where(c["s_gen"]).limit(1).select(F.lit(True)).scalar(),
+        F.lit(False))
 
-    # ---- refinement: pure-Catalyst fast paths for the dominant shapes ----
-    # (round-6: all predicates read the per-side scalar metadata computed
-    # before the join — zero array ops per candidate on the fast paths)
-    sg = F.col(geom_col)
-    rg = F.col("__ref_geom")
-    s_pt, r_pt = F.col("__s_kind") == 0, F.col("__r_kind") == 0
+    def route(refs, pair, igeom):
+        # without the hint a small ref's size estimate would still
+        # broadcast it: broadcast_ref=False asks for the partitioned join
+        refs = F.broadcast(refs) if broadcast_ref else refs.hint("merge")
+        return s_c.join(refs, keys).where(pair).select(
+            *[igeom.alias(geom_col) if n == geom_col else F.col(n)
+              for n in s_cols],
+            *[F.col(n) for n in keep_ref_cols])
 
-    def rect_geom(x0, y0, x1, y1):
-        return F.struct(
-            F.lit("Polygon").alias("geom_type"),
-            F.array(x0, x1, x1, x0, x0).alias("x"),
-            F.array(y0, y0, y1, y1, y0).alias("y"),
-            F.array(F.lit(0), F.lit(5)).alias("ring_offsets"),
-            F.array(F.lit(0), F.lit(1)).alias("part_offsets"),
-        )
+    fast = route(r_c.where(c["r_pr"]), c["fast"], c["fast_geom"])
+    slow = route(r_c.where(c["r_gen"] | s_general), c["slow"],
+                 c["slow_geom"])
+    return fast.unionByName(slow)
 
-    fast = cand_of(s_f, r_f)
-    # the same point/rect rules as the flat bbox join (one helper); a
-    # point side survives as its own geometry, two rects as their overlap
-    fast_keep, ibox = point_rect_refinement(
-        s_pt, r_pt,
-        tuple(F.col(f"__s_{c}") for c in ("minx", "miny", "maxx", "maxy")),
-        tuple(F.col(f"__r_{c}") for c in ("minx", "miny", "maxx", "maxy")),
+
+def _join_cols(geom_col: str, res: int) -> dict:
+    """The pure Column trees of spatial_intersection_join, memoized per
+    (geom_col, res) like `_terms_cols`: the two sides' term explodes, the
+    per-side kind filters, and per route the pair predicate (min-common-
+    term dedup + route + refinement) and the output geometry."""
+    key = (geom_col, res)
+    got = _JOIN_COLS_CACHE.get(key)
+    if got is not None:
+        return got
+    # term emission (see module comment): matches enumerate each candidate
+    # pair once per SHARED term —
+    #   s.cov(plain)  == r.cov(plain)   same-res candidates (the hot path)
+    #   s.cov(plain)  == r.anc(plain)   stream coarsened, ref fine
+    #   s.anc(tagged) == r.cov(tagged)  ref coarsened, stream fine
+    # and never anc == anc (stream cov is never tagged, ref anc never plain).
+    # Only a COARSENED ref row emits the tagged copy: a fine row's tagged
+    # cells sit at `res`, where no stream ancestor term ever is (ancestors
+    # are strictly coarser), so they could never match.  The per-row test
+    # is a lambda filter, not a `when(res_used < res, ...)` branch: that
+    # branch inside the generator input trips a Catalyst
+    # nested-column-aliasing bug under Generate
+    # (INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND on the ref geometry's extracted
+    # struct fields).
+    s_term = F.explode(F.concat(
+        F.col("__cov"), F.transform("__anc", _term_anc)))
+    r_term = F.explode(F.concat(
+        F.col("__ref_cov"),
+        F.transform(F.filter(
+            "__ref_cov", lambda _: F.col("__ref_res_used") < F.lit(res)),
+            _term_anc),
+        F.col("__ref_anc"),
+    ))
+
+    # exactly-once pair dedup: keep the match whose join term is the
+    # smallest ENUMERATED shared term.  Round-6 short-circuit: a stream row
+    # with exactly ONE term (a point's single level-res cell, no ancestors
+    # — the dominant point-stream shape) can meet a given ref row at most
+    # once, because the ref side's enumerated terms (cov + distinct-level
+    # ancestors) are pairwise distinct — so the pair is trivially unique
+    # and the per-candidate array_intersect/array_min work is skipped (Or
+    # short-circuits in codegen; on the 7M-candidate salted bench every
+    # candidate takes the cheap branch).
+    min_common = F.array_min(F.concat(
+        F.array_intersect("__cov", "__ref_cov"),
+        F.array_intersect("__cov", "__ref_anc"),
+        F.transform(F.array_intersect("__anc", "__ref_cov"), _term_anc),
+    ))
+    single_term = (F.size("__cov") == 1) & (F.size("__anc") == 0)
+    dedup = single_term | (F.col("__term") == min_common)
+
+    # Routes.  Point/rect pairs take pure-Catalyst interval arithmetic over
+    # the per-side metadata (the same rules as the flat bbox join, one
+    # helper) and never reach Python; a point side survives as its own
+    # geometry, two rects as their overlap.  General pairs (either side
+    # neither point nor axis rect) take the Arrow-batched exact kernels.
+    # The route predicate reads both sides, so Catalyst keeps it in the
+    # join condition instead of filtering the stream: both routes join the
+    # SAME stream terms.
+    sg, rg = F.col(geom_col), F.col("__ref_geom")
+    sm, rm = F.col("__s_meta"), F.col("__r_meta")
+    s_pt, r_pt = sm[0] == 0, rm[0] == 0
+    general = F.greatest(sm[0], rm[0]) == 2
+    keep, (x0, y0, x1, y1) = point_rect_refinement(
+        s_pt, r_pt, tuple(sm[i] for i in range(1, 5)),
+        tuple(rm[i] for i in range(1, 5)))
+    overlap = F.struct(
+        F.lit("Polygon").alias("geom_type"),
+        F.array(x0, x1, x1, x0, x0).alias("x"),
+        F.array(y0, y0, y1, y1, y0).alias("y"),
+        F.array(F.lit(0), F.lit(5)).alias("ring_offsets"),
+        F.array(F.lit(0), F.lit(1)).alias("part_offsets"),
     )
-    fast_geom = F.when(s_pt, sg).when(r_pt, rg).otherwise(rect_geom(*ibox))
-    fast_out = fast.where(fast_keep).withColumn("__igeom", fast_geom)
+    # the exact kernel's empty result (null geom_type) drops the pair as a
+    # 0-or-1-row explode over the kernel's output attribute: a Filter on
+    # it would be pushed below the projection and run the kernel twice
+    exact = F.explode(F.filter(F.array(_pair_intersection(sg, rg)),
+                               lambda g: g["geom_type"].isNotNull()))
+    cols = {
+        "s_term": s_term, "r_term": r_term,
+        "s_gen": sm[0] == 2, "r_pr": rm[0] < 2, "r_gen": rm[0] == 2,
+        "fast": dedup & ~general & keep,
+        "fast_geom": F.when(s_pt, sg).when(r_pt, rg).otherwise(overlap),
+        "slow": dedup & general,
+        "slow_geom": exact,
+    }
+    if len(_JOIN_COLS_CACHE) >= 256:
+        _JOIN_COLS_CACHE.clear()
+    _JOIN_COLS_CACHE[key] = cols
+    return cols
 
-    # general geometries: Arrow-batched exact kernels (the slow path only
-    # ever sees pairs with a non-(point|axis-rect) side — three sub-joins
-    # covering exactly the pairs where either side is general)
-    slow = (
-        cand_of(s_s, r_f)
-        .unionByName(cand_of(s_s, r_s))
-        .unionByName(cand_of(s_f, r_s))
-    )
-    slow_out = slow.withColumn(
-        "__igeom", _pair_intersection(sg, rg)
-    ).where(F.col("__igeom.geom_type").isNotNull())
 
-    refined = fast_out.unionByName(slow_out)
-    out_cols = [
-        F.col("__igeom").alias(geom_col) if c == geom_col else F.col(c)
-        for c in stream.columns
-    ] + [F.col(c) for c in keep_ref_cols]
-    return refined.select(*out_cols)
+_JOIN_COLS_CACHE: dict = {}
 
 
 # -------------------------------------------------------------- contains
@@ -1464,7 +1462,7 @@ def assign_tiles(
     keep predicates, general shapes refined by the Arrow-batched exact
     kernel `_geom_intersects_rect`.
     """
-    _reject_staged(df, _bbox_names("__b"))
+    _reject_staged(df.columns, _bbox_names("__b"))
     g = F.col(geom_col)
     flat = flat_bbox(df, geom_col)
     is_fast = is_bbox_shape(g)

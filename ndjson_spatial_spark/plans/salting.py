@@ -15,8 +15,9 @@ them.  The pattern here is classic two-sided salting:
   4. the BUILD side replicates each hot-key row to ALL salts;
   5. join on (key, salt) — hot keys now spread across `factor` tasks.
 
-The salt map is tiny (only hot keys) and broadcast.  The cell-index
-candidate join of operators/spatial.py composes these steps itself.
+The salt map is tiny (only hot keys); steps 3 and 4 read it as one map
+value through a scalar subquery.  The cell-index candidate join of
+operators/spatial.py composes these steps itself.
 """
 
 from __future__ import annotations
@@ -47,7 +48,7 @@ def salt_plan(
     max_factor: int = 64,
 ) -> DataFrame:
     """Hot keys -> salt factor.  Returned DF is small by construction (only
-    keys above hot_threshold) and is broadcast by the join."""
+    keys above hot_threshold)."""
     return (
         freq.where(F.col("key_count") > hot_threshold)
         .select(
@@ -59,30 +60,26 @@ def salt_plan(
     )
 
 
+def _salt_factor(key: str, plan: DataFrame):
+    """Each row's salt factor: its hot key's factor, 1 for a cold key.  The
+    salt map is read as ONE map<key, factor> value through a scalar
+    subquery instead of a join: frames salted with the same map then share
+    every exchange above them (a cached map scanned under an exchange
+    would give each consumer its own adaptive stage, and none is reused)."""
+    salt_map = plan.agg(F.map_from_entries(F.collect_list(
+        F.struct(F.col(key), F.col("salt_factor"))))).scalar()
+    return F.coalesce(F.try_element_at(salt_map, F.col(key)), F.lit(1))
+
+
 def apply_salt_scatter(df: DataFrame, key: str, plan: DataFrame) -> DataFrame:
     """Probe side: hot-key rows get a uniform random salt in [0, factor);
     cold keys get salt 0.  Adds `__salt`."""
-    j = df.join(F.broadcast(plan), key, "left")
-    return j.withColumn(
-        "__salt",
-        F.when(
-            F.col("salt_factor").isNotNull(),
-            (F.rand(seed=42) * F.col("salt_factor")).cast("int"),
-        ).otherwise(F.lit(0)),
-    ).drop("salt_factor")
+    f = _salt_factor(key, plan)
+    return df.withColumn("__salt", (F.rand(seed=42) * f).cast("int"))
 
 
 def apply_salt_replicate(df: DataFrame, key: str, plan: DataFrame) -> DataFrame:
     """Build side: hot-key rows are replicated once per salt; cold keys get
     the single salt 0.  Adds `__salt`."""
-    j = df.join(F.broadcast(plan), key, "left")
-    return j.withColumn(
-        "__salt",
-        F.explode(
-            F.when(
-                F.col("salt_factor").isNotNull(),
-                F.sequence(F.lit(0), F.col("salt_factor") - 1),
-            ).otherwise(F.array(F.lit(0)))
-        ),
-    ).drop("salt_factor")
-
+    f = _salt_factor(key, plan)
+    return df.withColumn("__salt", F.explode(F.sequence(F.lit(0), f - 1)))

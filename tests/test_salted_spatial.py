@@ -82,3 +82,174 @@ class TestJoinStrategies:
             "__cell", hot_threshold=50, target_per_salt=50,
         )
         assert plan.count() >= 1
+
+
+# ---------------------------------------------------------------------------
+# one candidate join per call, built with no Spark job
+
+
+def _l_json(x0, y0, w, h):
+    pts = [(x0, y0), (x0 + w, y0), (x0 + w, y0 + h / 2),
+           (x0 + w / 2, y0 + h / 2), (x0 + w / 2, y0 + h), (x0, y0 + h),
+           (x0, y0)]
+    return json.dumps({"type": "Polygon",
+                       "coordinates": [[[float(a), float(b)] for a, b in pts]]})
+
+
+def _rect_json(x0, y0, w, h):
+    ring = [(x0, y0), (x0 + w, y0), (x0 + w, y0 + h), (x0, y0 + h), (x0, y0)]
+    return json.dumps({"type": "Polygon",
+                       "coordinates": [[[float(a), float(b)] for a, b in ring]]})
+
+
+def _mixed_rows(rng, n_pt, n_rect, n_l, lo, hi):
+    rows = []
+    for _ in range(n_pt):
+        x, y = rng.uniform(0, 400_000, 2)
+        rows.append(json.dumps({"type": "Point",
+                                "coordinates": [float(x), float(y)]}))
+    for make, n in ((_rect_json, n_rect), (_l_json, n_l)):
+        for _ in range(n):
+            x, y = rng.uniform(0, 400_000, 2)
+            rows.append(make(x, y, *rng.uniform(lo, hi, 2)))
+    return rows
+
+
+@pytest.fixture(scope="module")
+def mixed(spark, tmp_path_factory):
+    """Points, axis rects and concave Ls on both sides, staged to parquet
+    (the stream is a plain file scan)."""
+    import numpy as np
+
+    rng = np.random.default_rng(8)
+    root = tmp_path_factory.mktemp("mixed")
+    paths = []
+    for name, rows in (("stream", _mixed_rows(rng, 400, 60, 40, 5e3, 60e3)),
+                       ("ref", _mixed_rows(rng, 5, 30, 15, 20e3, 120e3))):
+        path = str(root / name)
+        (spark.createDataFrame(list(enumerate(rows)), ["id", "gj"])
+         .select(F.col("id").alias("sid" if name == "stream" else "rid"),
+                 parse_geojson("gj").alias("geom"))
+         .write.parquet(path))
+        paths.append(path)
+    return paths
+
+
+SALTED = dict(broadcast_ref=False, salt_hot_cells=True, hot_threshold=5,
+              target_per_salt=5)
+
+
+def _plan_nodes(df):
+    """The operators of df's executed plan (after an action on df itself):
+    adaptive stages resolved; reused exchanges, cached relations and
+    subqueries are not entered."""
+    out = []
+
+    def walk(n):
+        name = n.nodeName()
+        if name == "AdaptiveSparkPlan":
+            return walk(n.executedPlan())
+        if name.endswith("QueryStage"):
+            return walk(n.plan())
+        out.append(n)
+        if name not in ("ReusedExchange", "InMemoryTableScan"):
+            kids = n.children()
+            for i in range(kids.size()):
+                walk(kids.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
+def _pairs(df):
+    return sorted((r.sid, r.rid, round(sum(r.geom.x), 4),
+                   round(sum(r.geom.y), 4)) for r in df.collect())
+
+
+class TestOneJoin:
+    def _join(self, spark, mixed, **kw):
+        stream, ref = (spark.read.parquet(p) for p in mixed)
+        return spatial_intersection_join(stream, ref, res=9,
+                                         keep_ref_cols=("rid",), **kw)
+
+    def test_building_the_join_runs_no_spark_job(self, spark, mixed):
+        sc = spark.sparkContext
+        stream, ref = (spark.read.parquet(p) for p in mixed)
+        for i, kw in enumerate((dict(broadcast_ref=True),
+                                dict(broadcast_ref=False), SALTED)):
+            group = f"build-{i}"
+            sc.setJobGroup(group, group)
+            try:
+                spatial_intersection_join(stream, ref, res=9, **kw)
+            finally:
+                sc.setJobGroup("tests", "tests")
+            assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], kw
+
+    def test_cached_frames_per_call(self, spark, mixed):
+        jsc = spark.sparkContext._jsc.sc()
+        for kw, most in ((dict(broadcast_ref=True), 0),
+                         (dict(broadcast_ref=False), 0), (SALTED, 1)):
+            before = jsc.getPersistentRDDs().size()
+            self._join(spark, mixed, **kw).count()
+            assert jsc.getPersistentRDDs().size() - before <= most, kw
+
+    def test_salted_join_scans_terms_and_scatters_the_stream_once(
+            self, spark, mixed):
+        salted = self._join(spark, mixed, **SALTED)
+        got = _pairs(salted)
+        assert got == _pairs(self._join(spark, mixed))
+        # both refinement routes ran (general shapes on both sides) ...
+        assert len({r[0] for r in got}) > 50
+        nodes = _plan_nodes(salted)
+        scans = [n for n in nodes if n.nodeName().startswith("Scan")
+                 and mixed[0] in n.toString()]
+        assert len(scans) == 1
+        # ... and every term join reads the one stream exchange: the second
+        # route reuses it instead of scanning, terming and scattering again
+        joins = [n for n in nodes if n.nodeName() == "SortMergeJoin"
+                 and "[__term#" in n.toString()]
+        assert len(joins) == 2
+
+        def stream_exchange(n):
+            while n.nodeName() not in ("Exchange", "ReusedExchange"):
+                n = (n.plan() if n.nodeName().endswith("QueryStage")
+                     else n.children().apply(0))
+            return n.child() if n.nodeName() == "ReusedExchange" else n
+
+        ex = [stream_exchange(j.children().apply(0)) for j in joins]
+        assert ex[0].equals(ex[1])
+        assert sum(n.nodeName() == "ReusedExchange" for n in nodes) == 1
+
+    def test_broadcast_join_scans_the_stream_at_most_twice(self, spark, mixed):
+        bc = self._join(spark, mixed)
+        bc.collect()
+        scans = [n for n in _plan_nodes(bc) if n.nodeName().startswith("Scan")
+                 and mixed[0] in n.toString()]
+        assert 1 <= len(scans) <= 2
+
+
+class TestStagedNames:
+    def test_staged_names_are_rejected(self, spark, geoms, refs):
+        s = geoms.select("doc_id", "offset", "geom")
+        for name in ("__cov", "__term", "__ref_geom", "__s_meta", "__lv"):
+            with pytest.raises(ValueError, match=name):
+                spatial_intersection_join(s.withColumn(name, F.lit(1)), refs,
+                                          res=7)
+        with pytest.raises(ValueError, match="__salt"):
+            spatial_intersection_join(s.withColumn("__salt", F.lit(1)), refs,
+                                      res=7, **SALTED)
+        with pytest.raises(ValueError, match="__ref_cov"):
+            spatial_intersection_join(
+                s, refs.withColumn("__ref_cov", F.lit(1)), res=7,
+                keep_ref_cols=("__ref_cov",))
+
+    def test_other_dunder_and_salt_factor_columns_survive(
+            self, spark, geoms, refs):
+        # __s_kind used to come back overwritten with the join's kind code,
+        # and salt_factor made the salted call ambiguous
+        s = geoms.select("doc_id", "offset", "geom").withColumns(
+            {"__s_kind": F.lit(7), "salt_factor": F.lit(5)})
+        for kw in ({}, SALTED):
+            out = spatial_intersection_join(s, refs, res=7, **kw)
+            got = out.select("__s_kind", "salt_factor").distinct().collect()
+            assert [tuple(r) for r in got] == [(7, 5)], kw
