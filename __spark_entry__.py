@@ -671,7 +671,7 @@ def q_dwithin(spark, sf_dir):
 def q_gc_clip(spark, sf_dir):
     """GeometryCollection inputs to the intersection overlay (round-4):
     supplier GCs of {Point, LineString, Polygon} members auto-explode
-    inside spatial_intersection_join (explode_gc=True, pure-Catalyst
+    inside spatial_intersection_join (always, pure-Catalyst
     gc_members_expr) and each member clips against the nation rects — the
     reference enumerates GC as a first-class type and GEOS intersection()
     accepts it (ndjson-spatial/src/common.rs:24-45, intersection.rs:133).
@@ -1821,8 +1821,8 @@ def q_flagship_keyed(spark, sf_dir):
     """The FLAGSHIP pipeline itself under the exact gate: an interleaved
     documents frame (text + geometry spans, input_hint schema) built in
     pure Catalyst from supplier keys runs through the real
-    docs_tile_pipeline — JSON classifier, bbox fast-path join, max-corner
-    pair dedup, tile assignment — and the oracle replays the closed-form
+    docs_tile_pipeline — JSON classifier, bbox fast-path join,
+    min-common-term pair dedup, tile assignment — and the oracle replays the closed-form
     geometry/join/tile arithmetic in SQL.  The splitmix64 synthetic corpus
     stays rows-only for scale realism; THIS query pins the machinery."""
     from ndjson_spatial_spark.flagship import docs_tile_pipeline

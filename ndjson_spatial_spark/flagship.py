@@ -4,8 +4,8 @@ interleaved text+media documents table (the BASELINE.json headline metric).
 Hybrid plan: bbox-shaped geometries (points + axis rects — the dominant
 web shapes, and 100% of the synthetic corpus) take the pure-Catalyst fast
 path (operators/bbox_fast.py): flat columns end to end, zero Python
-workers, zero intermediate materialization, every stage inside whole-stage
-codegen.  General shapes route through the exact struct operators
+workers, zero intermediate materialization, every stage JVM-native.
+General shapes route through the exact struct operators
 (operators/spatial.py) and the outputs union — same results, pinned by
 tests/test_bbox_fast.py equivalence tests against the struct pipeline.
 
@@ -14,10 +14,12 @@ one general-shape pass — all embarrassingly-parallel columnar scans; the
 general branch's parse UDF and exact tile refinement only ever see the
 (usually empty) non-bbox rows because the shape filter precedes them.
 
-Join strategy: the ref sample is ~1/ref_mod of the polygon spans, so the
-fast path's bbox join always broadcasts it (bbox_intersection_join has no
-other plan); the general branch uses spatial_intersection_join's default
-broadcast ref.
+Join strategy: both branches run the engine's one candidate join — cell
+cover terms, one `__term` equi-join, the min-common-term pair dedup —
+with the ref broadcast.  The ref sample is ~1/ref_mod of the polygon
+spans, so the fast path's bbox join (bbox_intersection_join, the term
+join over flat bbox columns at a fixed `res`) always broadcasts it; the
+general branch uses spatial_intersection_join's default broadcast ref.
 """
 
 from __future__ import annotations

@@ -46,9 +46,9 @@ def _unit_v_expr(y_col):
 def _tile_index(coord, res, flip: bool = False):
     """Mercator coordinate -> level-`res` tile index, pure Catalyst: the
     floor of unit_xy's clipped u (v when `flip`) times 2^res, so always in
-    [0, 2^res - 1].  Point cells, the bbox join's cover and the zoom-tile
-    cover all use it.  `res` is an int or an integer Column (a zoom
-    column; 2.0^z is exact for integer z)."""
+    [0, 2^res - 1].  Point cells and the zoom-tile cover use it.  `res`
+    is an int or an integer Column (a zoom column; 2.0^z is exact for
+    integer z)."""
     n = (F.pow(F.lit(2.0), res) if isinstance(res, Column)
          else F.lit(float(1 << res)))
     u = _unit_v_expr(coord) if flip else _unit_u_expr(coord)

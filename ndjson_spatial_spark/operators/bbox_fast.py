@@ -5,33 +5,36 @@ documents table is 100% points/rects by construction, and the general
 operators' `__kind` split shows the same shapes dominate real GeoJSON).
 For exactly those shapes, every stage of spatial-join + tile-assignment is
 CLOSED-FORM — cover cells are integer ranges, refinement is interval
-arithmetic, Morton ids are shift/mask chains — so the whole pipeline can
-run inside whole-stage codegen with ZERO Python workers and ZERO
-intermediate materialization:
+arithmetic, Morton ids are shift/mask chains — so the whole pipeline runs
+in Catalyst with ZERO Python workers and ZERO intermediate
+materialization:
 
     flat_bbox        geometry struct -> 4 double cols + is_point flag
     bbox_intersection_join
-                     sequence-explode cover -> broadcast cell equi-join ->
-                     max-corner pair dedup -> interval refinement; emits
-                     the intersection bbox, no structs
+                     the struct join's term join over the flat columns:
+                     cover terms at `res` -> broadcast `__term` equi-join
+                     -> min-common-term pair dedup -> interval refinement;
+                     emits the intersection bbox, no structs
     assign_tiles_bbox
                      per-zoom integer tile ranges -> sequence explode ->
                      exact keep predicates -> Morton tile ids
 
 Semantics are IDENTICAL to spatial_intersection_join + assign_tiles on the
-same shapes (pinned by tests/test_bbox_fast.py equivalence tests); the
-point/rect refinement itself (`point_rect_refinement`) is shared with the
-struct join's point/rect branch.  The zoom-tile cover (`_tiles`) is the
-only one in the engine: the struct operator `assign_tiles` projects its
-geometries with `flat_bbox`, routes point/rect rows through
-assign_tiles_bbox, and refines general rows' tiles of the same cover with
-its exact geometry-vs-rect kernel.
+same shapes (pinned by tests/test_bbox_fast.py equivalence tests): the
+candidate join is the struct join's own (`spatial._with_flat_terms` feeds
+its term stages from the flat columns, `spatial._term_join_cols` gives the
+explodes and the dedup), and the point/rect refinement itself
+(`point_rect_refinement`) is shared with the struct join's point/rect
+route.  The zoom-tile cover (`_tiles`) is the only one in the engine: the
+struct operator `assign_tiles` projects its geometries with `flat_bbox`,
+routes point/rect rows through assign_tiles_bbox, and refines general
+rows' tiles of the same cover with its exact geometry-vs-rect kernel.
 
 Scale notes: the only exchange is the broadcast of the (small) ref side;
 a ref too large to broadcast belongs on spatial_intersection_join, which
 owns the hash-partitioned and hot-cell-salted plans and the
 cap+ancestor-terms machinery for huge covers.  Fan-out per row equals the
-true cover size; everything else is narrow and codegen'd.
+true cover size (the flat terms never coarsen); everything else is narrow.
 """
 
 from __future__ import annotations
@@ -121,26 +124,6 @@ def _reject_staged(columns, staged) -> None:
                 f"operator stages internally; rename it")
 
 
-def _with_cover(df: DataFrame, res: int, p: str, cp: str) -> DataFrame:
-    """Explode the integer cover ranges of the bbox (prefix `p`) at `res`:
-    adds {cp}tx0/{cp}ty0 (range starts, used by the pair-dedup rule), the
-    exploded {cp}tx/{cp}ty, and the Morton {cp}cell."""
-    _reject_staged(df.columns, [f"{cp}{c}" for c in
-                        ("tx0", "tx1", "ty0", "ty1", "tx", "ty", "cell")])
-    out = df.withColumns({
-        f"{cp}tx0": _tile_index(F.col(f"{p}minx"), res),
-        f"{cp}tx1": _tile_index(F.col(f"{p}maxx"), res),
-        f"{cp}ty0": _tile_index(F.col(f"{p}maxy"), res, flip=True),
-        f"{cp}ty1": _tile_index(F.col(f"{p}miny"), res, flip=True),
-    })
-    out = out.withColumn(f"{cp}tx", F.explode(F.sequence(f"{cp}tx0", f"{cp}tx1")))
-    out = out.withColumn(f"{cp}ty", F.explode(F.sequence(f"{cp}ty0", f"{cp}ty1")))
-    return out.withColumn(
-        f"{cp}cell",
-        cell_id_expr(F.col(f"{cp}tx"), F.col(f"{cp}ty"), F.lit(res)),
-    ).drop(f"{cp}tx1", f"{cp}ty1")
-
-
 def bbox_intersection_join(
     stream: DataFrame,
     ref: DataFrame,
@@ -154,24 +137,25 @@ def bbox_intersection_join(
     five __b bbox columns preserved, the intersection emitted as flat bbox
     columns __iminx/__iminy/__imaxx/__imaxy + __ipt (a point iff either
     side is a point); boundary rules in `point_rect_refinement`.  The ref
-    side is always broadcast.
+    side is always broadcast.  The candidates come from the struct join's
+    term join, fed by the flat bbox columns: the same cover terms at `res`
+    (never coarsened), the same `__term` explodes and the same
+    min-common-term pair dedup.  An input column named like a column the
+    term join stages raises ValueError.
     """
-    s = _with_cover(stream, res, "__b", "__s")
-    r = _with_cover(ref, res, "__r", "__q")
-    j = s.join(F.broadcast(r), F.col("__scell") == F.col("__qcell"))
+    from .spatial import _TERM_JOIN_STAGED, _term_join_cols, _with_flat_terms
 
-    # exactly-once pair dedup: a pair shares the rectangle of cells
-    # [max(tx0s, tx0r) ..] x [max(ty0s, ty0r) ..]; keep only its corner
-    j = j.where(
-        (F.col("__stx") == F.greatest(F.col("__stx0"), F.col("__qtx0")))
-        & (F.col("__sty") == F.greatest(F.col("__sty0"), F.col("__qty0")))
-    )
-
+    _reject_staged([*stream.columns, *ref.columns], _TERM_JOIN_STAGED)
+    c = _term_join_cols(res)
+    s = _with_flat_terms(stream, "__b", res, "__").withColumn(
+        "__term", c["s_term"])
+    r = _with_flat_terms(ref, "__r", res, "__ref_").withColumn(
+        "__term", c["r_term"])
     sp, rp = F.col("__bpt"), F.col("__rpt")
     keep, ibox = point_rect_refinement(sp, rp, _box("__b"), _box("__r"))
     s_bbox = _bbox_names("__b")
-    return j.where(keep).select(
-        *[c for c in stream.columns if c not in s_bbox],
+    return s.join(F.broadcast(r), "__term").where(c["dedup"] & keep).select(
+        *[n for n in stream.columns if n not in s_bbox],
         *[v.alias(n) for n, v in zip(_bbox_names("__i"), ibox + (sp | rp,))],
     )
 

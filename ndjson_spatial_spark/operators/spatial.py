@@ -26,7 +26,7 @@ from pyspark.sql.pandas.functions import pandas_udf
 
 from ..kernels import cells as KC
 from ..kernels import geometry as KG
-from ..functions.geo import GEOM_TYPE, geom_to_batch
+from ..functions.geo import GEOM_TYPE, explode_collections, geom_to_batch
 from ..functions.cells_fn import cell_id_expr
 from .bbox_fast import (
     _bbox_names,
@@ -615,19 +615,43 @@ def _with_terms(df: DataFrame, geom_col: str, res: int, cap: int,
     c = _terms_cols(geom_col, res, cap, min_res,
                     tuple(sorted({int(l) for l in anc_levels})),
                     levels is not None)
-    base = list(df.columns)
     gate = [] if levels is None else [levels.alias("__lv")]
-    st = df.select("*", *c["bbox"], *gate)
-    st = st.select("*", *c["uv"])
-    st = st.select("*", c["ru"])
-    st = st.select("*", *c["tiles"])
     out = [c[n].alias(f"{prefix}{n}") for n in ("cov", "anc", "res_used")]
     if side is not None:
         out.append(c["meta"].alias(f"__{side}_meta"))
-    return st.select(*base, *out)
+    return _staged_terms(df, [*c["bbox"], *gate], c, out)
 
 
-#: the columns `_with_terms` stages before its final projection
+def _with_flat_terms(df: DataFrame, p: str, res: int,
+                     prefix: str) -> DataFrame:
+    """`df` plus the join terms of its flat bbox under prefix `p` (see
+    `bbox_fast.flat_bbox`): {prefix}cov, {prefix}anc and {prefix}res_used,
+    as `_with_terms` names them.  The terms stay at `res` (min_res = res:
+    no coarsening, so no ancestors and the cap is moot); a row with a null
+    bbox gets a null cover and emits no term."""
+    core = _terms_core(res, 0, res, (), False)
+    bbox = [F.col(f"{p}{n}").alias(f"__bb_{n}")
+            for n in ("minx", "maxx", "miny", "maxy")]
+    out = [core["cov"].alias(f"{prefix}cov"),
+           core["anc"].alias(f"{prefix}anc"),
+           F.col("__ru").alias(f"{prefix}res_used")]
+    return _staged_terms(df, bbox, core, out)
+
+
+def _staged_terms(df: DataFrame, bbox: list, c: dict, out: list) -> DataFrame:
+    """The staged projection chain of the join terms: `bbox` stages the
+    __bb_* columns (and the gated levels __lv), the stages of `c` (see
+    `_terms_core`) derive unit coords, res_used and the tile range from
+    them, and the last projection keeps `df`'s columns plus `out`."""
+    st = df.select("*", *bbox)
+    st = st.select("*", *c["uv"])
+    st = st.select("*", c["ru"])
+    st = st.select("*", *c["tiles"])
+    return st.select(*df.columns, *out)
+
+
+#: the columns the term stages (`_staged_terms`) stage before their final
+#: projection
 _TERMS_STAGED = ("__bb_minx", "__bb_maxx", "__bb_miny", "__bb_maxy",
                  "__u0", "__v0", "__u1", "__v1", "__ru",
                  "__tx0", "__tx1", "__ty0", "__ty1", "__lv")
@@ -710,8 +734,11 @@ def _terms_core(res: int, cap: int, min_res: int, anc_levels: tuple,
         return (tx1 - tx0 + 1) * (ty1 - ty0 + 1)
 
     # the kernel's descending first-fit coarsen scan == the LARGEST
-    # fitting level (tile counts are monotone non-increasing coarser)
-    ru = F.array_max(F.filter(
+    # fitting level (tile counts are monotone non-increasing coarser).
+    # With min_res >= res no coarse level exists and the cover stays at
+    # res: the constant folds into the cover lambdas, and no row runs the
+    # interpreted scan (the flat bbox join's case)
+    ru = F.lit(res) if min_res >= res else F.array_max(F.filter(
         F.sequence(F.lit(min_res), F.lit(res)),
         lambda r: (cnt(r) <= F.lit(cap)) | (r == F.lit(min_res))))
     tx0, tx1, ty0, ty1 = rng(F.col("__ru"))
@@ -759,29 +786,47 @@ _TERMS_COLS_CACHE: dict = {}
 _TERMS_CORE_CACHE: dict = {}
 
 
-def _coarse_levels(df_terms: DataFrame, res: int) -> list:
-    """Distinct below-`res` cover resolutions present in a terms frame — a
-    tiny map-side-combinable aggregate (≤ res values) that drives the other
-    side's ancestor emission; empty in the common nothing-coarsened case,
-    which keeps the hot path at zero ancestor overhead."""
-    rows = (
-        df_terms.select("__res_used")
-        .where(F.col("__res_used") < res)
-        .distinct()
-        .collect()
-    )
-    return sorted(r[0] for r in rows)
-
-
 # --------------------------------------------------------- intersection
 
-#: the names spatial_intersection_join stages beside the caller's columns:
-#: both sides' staged terms, metadata and join columns meet in one row, so
-#: none may name a stream column or a kept ref column
-_JOIN_STAGED = _TERMS_STAGED + (
-    "__cov", "__anc", "__res_used", "__s_meta",
-    "__ref_geom", "__ref_cov", "__ref_anc", "__ref_res_used", "__r_meta",
-    "__term")
+#: the names a term join stages beside the caller's columns: both sides'
+#: staged terms and the join term meet in one row
+_TERM_JOIN_STAGED = _TERMS_STAGED + (
+    "__cov", "__anc", "__res_used",
+    "__ref_cov", "__ref_anc", "__ref_res_used", "__term")
+#: spatial_intersection_join also stages the ref geometry and both sides'
+#: metadata; none may name a stream column or a kept ref column
+_JOIN_STAGED = _TERM_JOIN_STAGED + ("__s_meta", "__ref_geom", "__r_meta")
+
+
+def _term_sides(stream: DataFrame, geom_col: str, ref: DataFrame, res: int,
+                cap: int, min_res: int) -> tuple:
+    """Both sides of a term join over geometry structs: ``stream``'s terms
+    (of `geom_col`, metadata __s_meta) and ``ref``'s (of __ref_geom, prefix
+    __ref_, metadata __r_meta).  Returns (stream terms, coarse ref levels,
+    stream terms exploded on __term, ref terms exploded on __term).
+
+    The ref side emits its cover terms + its cover's ancestors, plain, at
+    every level coarsening can reach (what a coarsened STREAM row's cover
+    meets) + for a coarsened row its cover ancestor-tagged (what a fine
+    stream row's ancestor terms meet).  Stream ancestors are only needed at
+    levels where some REF row actually coarsened — usually none.  The
+    distinct coarse ref levels are a scalar subquery, so the plan decides
+    this at execution.  Each side is ONE projection chain: terms, shape
+    kind and bbox."""
+    c = _term_join_cols(res)
+    r_t = _with_terms(ref, "__ref_geom", res, cap, min_res,
+                      range(min_res, res), prefix="__ref_", side="r")
+    levels = (
+        r_t.where(F.col("__ref_res_used") < res)
+        .agg(F.collect_set("__ref_res_used")).scalar()
+    )
+    s_t = _with_terms(stream, geom_col, res, cap, min_res, (), side="s",
+                      levels=levels)
+    # each explode reads the staged term attributes, never a term
+    # expression over the geometry (see the InferFiltersFromGenerate note
+    # in session.py)
+    return (s_t, levels, s_t.withColumn("__term", c["s_term"]),
+            r_t.withColumn("__term", c["r_term"]))
 
 
 def spatial_intersection_join(
@@ -796,7 +841,6 @@ def spatial_intersection_join(
     hot_threshold: int = 100_000,
     target_per_salt: int = 50_000,
     sketch_sample_frac: float | None = 0.05,
-    explode_gc: bool = True,
     keep_ref_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """`ndjson-spatial intersection --ref f -g <type>`
@@ -841,7 +885,7 @@ def spatial_intersection_join(
     possibly over-`cap` cover for never losing candidates).
 
     Pair dedup without a shuffle: a (stream, ref) pair meets once per
-    SHARED term; instead of dropDuplicates (an extra shuffle whose
+    SHARED term; instead of a distinct (an extra shuffle whose
     AQE-coalesced output would also throttle the refinement UDF's
     parallelism), each side carries its full cover+ancestor arrays and the
     pair is kept only where the join term equals the smallest enumerated
@@ -862,11 +906,8 @@ def spatial_intersection_join(
     # row yields one output row per (member, ref) hit, geometry replaced
     # by that member's intersection — the exploded equivalent, matching
     # GEOS intersection() over each member.
-    if explode_gc:
-        from ..functions.geo import explode_collections
-
-        stream = explode_collections(stream, geom_col)
-        ref = explode_collections(ref, geom_col)
+    stream = explode_collections(stream, geom_col)
+    ref = explode_collections(ref, geom_col)
 
     if res is None:
         res = auto_resolution(ref, geom_col)
@@ -885,31 +926,11 @@ def spatial_intersection_join(
         if stream.rdd.getNumPartitions() < min(par, 8):
             stream = stream.repartition(par)
 
-    # ref side emits: its cover terms + its cover's ancestors, plain, at
-    # every level coarsening can reach (what a coarsened STREAM row's cover
-    # meets) + for a coarsened row its cover ancestor-tagged (what a fine
-    # stream row's ancestor terms meet).  Each side is ONE projection
-    # chain: terms, shape kind and bbox.
     c = _join_cols(geom_col, res)
-    r_t = _with_terms(
+    s_t, levels, s_c, r_c = _term_sides(
+        stream, geom_col,
         ref.select(F.col(geom_col).alias("__ref_geom"), *keep_ref_cols),
-        "__ref_geom", res, cap, min_res, range(min_res, res),
-        prefix="__ref_", side="r",
-    )
-    # stream ancestors are only needed at levels where some REF row
-    # actually coarsened — usually none.  The distinct coarse ref levels
-    # are a scalar subquery, so the plan decides this at execution.
-    levels = (
-        r_t.where(F.col("__ref_res_used") < res)
-        .agg(F.collect_set("__ref_res_used")).scalar()
-    )
-    s_t = _with_terms(stream, geom_col, res, cap, min_res, (), side="s",
-                      levels=levels)
-    # each explode reads the staged term attributes, never a term
-    # expression over the geometry (see the InferFiltersFromGenerate note
-    # in session.py)
-    s_c = s_t.withColumn("__term", c["s_term"])
-    r_c = r_t.withColumn("__term", c["r_term"])
+        res, cap, min_res)
 
     keys = ["__term"]
     if salted:
@@ -938,7 +959,7 @@ def spatial_intersection_join(
                 geom_col, res, cap, min_res, (), levels=levels,
             )
             freq = (
-                sk_t.select(c["s_term"].alias("__term"))
+                sk_t.select(_term_join_cols(res)["s_term"].alias("__term"))
                 .groupBy("__term")
                 .agg((F.count(F.lit(1)) / F.lit(sketch_sample_frac))
                      .cast("long").alias("key_count"))
@@ -984,13 +1005,10 @@ def spatial_intersection_join(
     return fast.unionByName(slow)
 
 
-def _join_cols(geom_col: str, res: int) -> dict:
-    """The pure Column trees of spatial_intersection_join, memoized per
-    (geom_col, res) like `_terms_cols`: the two sides' term explodes, the
-    per-side kind filters, and per route the pair predicate (min-common-
-    term dedup + route + refinement) and the output geometry."""
-    key = (geom_col, res)
-    got = _JOIN_COLS_CACHE.get(key)
+def _term_join_cols(res: int) -> dict:
+    """The Column trees every term join shares, memoized per `res`: the
+    two sides' `__term` explodes and the pair `dedup` predicate."""
+    got = _TERM_JOIN_COLS_CACHE.get(res)
     if got is not None:
         return got
     # term emission (see module comment): matches enumerate each candidate
@@ -1032,7 +1050,27 @@ def _join_cols(geom_col: str, res: int) -> dict:
         F.transform(F.array_intersect("__anc", "__ref_cov"), _term_anc),
     ))
     single_term = (F.size("__cov") == 1) & (F.size("__anc") == 0)
-    dedup = single_term | (F.col("__term") == min_common)
+    cols = {"s_term": s_term, "r_term": r_term,
+            "dedup": single_term | (F.col("__term") == min_common)}
+    if len(_TERM_JOIN_COLS_CACHE) >= 256:
+        _TERM_JOIN_COLS_CACHE.clear()
+    _TERM_JOIN_COLS_CACHE[res] = cols
+    return cols
+
+
+_TERM_JOIN_COLS_CACHE: dict = {}
+
+
+def _join_cols(geom_col: str, res: int) -> dict:
+    """The pure Column trees of spatial_intersection_join, memoized per
+    (geom_col, res) like `_terms_cols`: the per-side kind filters, and per
+    route the pair predicate (the shared dedup + route + refinement) and
+    the output geometry."""
+    key = (geom_col, res)
+    got = _JOIN_COLS_CACHE.get(key)
+    if got is not None:
+        return got
+    dedup = _term_join_cols(res)["dedup"]
 
     # Routes.  Point/rect pairs take pure-Catalyst interval arithmetic over
     # the per-side metadata (the same rules as the flat bbox join, one
@@ -1062,7 +1100,6 @@ def _join_cols(geom_col: str, res: int) -> dict:
     exact = F.explode(F.filter(F.array(_pair_intersection(sg, rg)),
                                lambda g: g["geom_type"].isNotNull()))
     cols = {
-        "s_term": s_term, "r_term": r_term,
         "s_gen": sm[0] == 2, "r_pr": rm[0] < 2, "r_gen": rm[0] == 2,
         "fast": dedup & ~general & keep,
         "fast_geom": F.when(s_pt, sg).when(r_pt, rg).otherwise(overlap),
@@ -1088,7 +1125,6 @@ def join_contains(
     res: int | None = None,
     cap: int = 256,
     min_res: int | None = None,
-    explode_gc: bool = True,
 ) -> DataFrame:
     """`ndjson-spatial join-contains --ref f --field-name n` — proposed but
     stubbed in the reference (join_contains.rs:21-23, README.md:71-77); the
@@ -1104,56 +1140,47 @@ def join_contains(
     CONTAINED side auto-explode to member rows (round-4, same
     pure-Catalyst expression as the intersection join) — each member is
     tested independently, so a GC contributes one collected entry per
-    contained member.
-    """
-    if explode_gc:
-        from ..functions.geo import explode_collections
+    contained member.  A containers column named `__cid` (the row id the
+    operator stages) or named `field_name` raises ValueError; the
+    contained columns ride inside the collected structs, so any name works
+    there.
 
-        contained = explode_collections(contained, geom_col)
+    Plan shape: the term join of spatial_intersection_join, with the
+    containers in the ref role and the contained rows in the stream role
+    (the same covering+ancestor terms, coarse-levels scalar subquery and
+    min-common-term dedup) -> refinement routed per pair on the contained
+    row's kind: points through the PIP kernel, every other geometry
+    through the general containment kernel -> collect per container ->
+    left join back onto the containers.  Building the plan runs no Spark
+    job.
+    """
+    cid = "__cid"
+    _reject_staged([*containers.columns, field_name], (cid,))
+    if field_name in containers.columns:
+        raise ValueError(
+            f"field_name {field_name!r} names an existing containers "
+            f"column; choose another name")
+    contained = explode_collections(contained, geom_col)
     if res is None:
         res = auto_resolution(containers, geom_col)
     if min_res is None:
         min_res = max(0, res - 6)
-    cid = "__cid"
-    # the id column feeds THREE separate branches (point terms, general
-    # terms, final join-back) — monotonically_increasing_id is only
-    # deterministic while the scan partitioning is, so an AQE-coalesced or
-    # recomputed branch could renumber and silently mis-bucket containment.
-    # Persisting pins one numbering for every consumer (same discipline as
+    # the id column feeds two branches (the container terms and the final
+    # join-back) — monotonically_increasing_id is only deterministic while
+    # the scan partitioning is, so an AQE-coalesced or recomputed branch
+    # could renumber and silently mis-bucket containment.  Persisting pins
+    # one numbering for every consumer (same discipline as
     # operators/knn.py).
     c = containers.withColumn(cid, F.monotonically_increasing_id()).persist()
-    c_t = _with_terms(
-        c.select(cid, F.col(geom_col).alias("__container_geom")),
-        "__container_geom", res, cap, min_res, (),
-    )
-    # containers only emit their (possibly cap-coarsened) cover; points
-    # bridge the resolution gap by emitting ancestors at exactly the
-    # coarse levels present among containers (usually none).
-    c_levels = _coarse_levels(c_t, res)
-    c_cells = (
-        c_t.withColumn("__cell", F.explode("__cov"))
-        .drop("__cov", "__anc", "__res_used")
-    )
-
-    pt_struct = F.struct(*[F.col(x) for x in contained.columns])
     d = contained.select(
-        pt_struct.alias("__feature"),
-        F.element_at(F.col(f"{geom_col}.x"), 1).alias("__px"),
-        F.element_at(F.col(f"{geom_col}.y"), 1).alias("__py"),
-        F.col(geom_col).alias("__pt_geom"),
-    ).where(F.col(f"{geom_col}.geom_type") == "Point")
-    d_t = _with_terms(d, "__pt_geom", res, cap, min_res, c_levels)
-    d_cells = (
-        d_t.withColumn("__cell", F.explode(F.concat("__cov", "__anc")))
-        .drop("__cov", "__anc", "__res_used")
+        F.struct(*[F.col(x) for x in contained.columns]).alias("__feature"),
+        F.col(geom_col).alias("__geom"),
     )
-
-    # no pair dedup needed: a point's terms sit at DISTINCT levels (its one
-    # level-res cell + one ancestor per coarse level) while a container's
-    # cover is at a single level, so each (container, point) pair joins at
-    # most once.  If contained ever grows beyond points, apply the
-    # min-common-term rule used by spatial_intersection_join.
-    cand = c_cells.join(d_cells, "__cell").drop("__cell")
+    _, _, d_c, c_c = _term_sides(
+        d, "__geom",
+        c.select(cid, F.col(geom_col).alias("__ref_geom")),
+        res, cap, min_res)
+    cand = d_c.join(c_c, "__term").where(_term_join_cols(res)["dedup"])
 
     @pandas_udf(T.BooleanType())
     def _pip_batch(key: pd.Series, px: pd.Series, py: pd.Series,
@@ -1188,56 +1215,24 @@ def join_contains(
             out[rows] = got
         return pd.Series(out)
 
-    hits = cand.where(
-        _pip_batch(F.col(cid), "__px", "__py", F.col("__container_geom"))
-    ).select(cid, "__feature")
-
-    # ---- general contained geometries (rects / polygons / lines) ----
-    # G ⊆ P iff (1) every vertex of G is inside P, (2) no edge of G
-    # properly crosses an edge of P (covers concave containers), and
-    # (3) no hole of P lies strictly inside G (a hole that does not cross
-    # G's boundary is wholly inside or outside, so one representative
-    # vertex decides).  Boundary contact counts as contained (PIP ray
-    # convention).  Candidate covers may span several cells, so the pair
-    # is deduped on (container, contained-row) ids — this branch prunes
-    # to nothing on point-only corpora before any Python runs.
-    g_src = contained.withColumn("__did", F.monotonically_increasing_id())
-    g = g_src.where(
-        F.col(f"{geom_col}.geom_type").isNotNull()
-        & (F.col(f"{geom_col}.geom_type") != "Point")
-    ).select(
-        "__did",
-        F.struct(*[F.col(x) for x in contained.columns]).alias("__feature"),
-        F.col(geom_col).alias("__g"),
-    )
-    g_t = _with_terms(g, "__g", res, cap, min_res, c_levels)
-    g_cells = (
-        g_t.withColumn("__cell", F.explode(F.concat("__cov", "__anc")))
-        .drop("__cov", "__anc", "__res_used")
-    )
-    # unlike points, a large contained geometry can itself cap-coarsen
-    # below `res`; the general branch's container terms therefore include
-    # ancestors at every reachable coarse level so mixed-res covers still
-    # meet (the dedup above absorbs the extra multiplicity)
-    c_tg = _with_terms(
-        c.select(cid, F.col(geom_col).alias("__container_geom")),
-        "__container_geom", res, cap, min_res, range(min_res, res),
-    )
-    c_cells_g = (
-        c_tg.withColumn("__cell", F.explode(F.concat("__cov", "__anc")))
-        .drop("__cov", "__anc", "__res_used")
-    )
-    cand_g = (
-        c_cells_g.join(g_cells, "__cell").drop("__cell")
-        .dropDuplicates([cid, "__did"])
-    )
-    hits_g = cand_g.where(
-        _geom_contained_batch(F.col(cid), F.col("__g"),
-                              F.col("__container_geom"))
-    ).select(cid, "__feature")
+    # Routes on the contained row's kind (__s_meta[0]; a point's bbox
+    # minimum is the point).  Points take the PIP kernel.  Every other
+    # geometry G takes the general kernel: G ⊆ P iff (1) every vertex of G
+    # is inside P, (2) no edge of G properly crosses an edge of P (covers
+    # concave containers), and (3) no hole of P lies strictly inside G (a
+    # hole that does not cross G's boundary is wholly inside or outside, so
+    # one representative vertex decides).  Boundary contact counts as
+    # contained (PIP ray convention).  On point-only input the general
+    # route's stream side is empty before any Python runs.
+    meta = F.col("__s_meta")
+    ref_geom = F.col("__ref_geom")
+    pts = cand.where((meta[0] == 0) & _pip_batch(
+        F.col(cid), meta[1], meta[2], ref_geom))
+    general = cand.where((meta[0] != 0) & _geom_contained_batch(
+        F.col(cid), F.col("__geom"), ref_geom))
 
     agg = (
-        hits.unionByName(hits_g)
+        pts.unionByName(general).select(cid, "__feature")
         .groupBy(cid).agg(F.collect_list("__feature").alias(field_name))
     )
     out = c.join(agg, cid, "left").withColumn(

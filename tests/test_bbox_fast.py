@@ -125,6 +125,72 @@ class TestBboxJoin:
         rows = tiled.collect()
         assert rows and {(t["__id"], t["__bucket"]) for t in rows} == {(7, 3)}
 
+    def test_matches_brute_force_oracle(self, spark):
+        # cover-free oracle: every (stream, ref) pair through the boundary
+        # rules in numpy, no cells involved
+        from ndjson_spatial_spark.kernels.cells import MERC_MAX
+
+        res = 8
+        cell = 2.0 * MERC_MAX / (1 << res)
+        rng = np.random.default_rng(17)
+
+        def box(x, y, w, h):
+            return (float(x), float(y), float(x + w), float(y + h), False)
+
+        def pt(x, y):
+            return (float(x), float(y), float(x), float(y), True)
+
+        refs = [box(0.0, 0.0, 4 * M, 4 * M), pt(-3 * M, -3 * M)]
+        for x, y, w, h in zip(*(rng.uniform(-20 * M, 20 * M, (2, 30))),
+                              *(rng.uniform(0.05 * M, 8 * M, (2, 30)))):
+            refs.append(box(x, y, w, h))
+        refs += [pt(x, y) for x, y in rng.uniform(-20 * M, 20 * M, (8, 2))]
+        stream = [
+            ("touch_right", box(4 * M, 0.0, 4 * M, 4 * M)),
+            ("touch_top", box(M, 4 * M, 2 * M, 2 * M)),
+            ("same_box", refs[0]),
+            ("pt_on_edge", pt(4 * M, 2 * M)),
+            ("pt_on_corner", pt(0.0, 0.0)),
+            ("pt_on_ref_pt", refs[1]),
+            ("pt_on_ref_corner", pt(*refs[2][2:4])),
+            ("rect_on_ref_edge", box(refs[3][2], refs[3][1], M, M)),
+            ("world", box(-20 * M, -20 * M, 40 * M, 40 * M)),
+        ]
+        for i, (x, y) in enumerate(rng.uniform(-22 * M, 22 * M, (120, 2))):
+            stream.append((f"pt{i}", pt(x, y)))
+        for i, (x, y, w, h) in enumerate(zip(
+                *(rng.uniform(-22 * M, 22 * M, (2, 60))),
+                *(rng.uniform(0.01 * M, 6 * M, (2, 60))))):
+            stream.append((f"rect{i}", box(x, y, w, h)))
+        # the world rect spans far more than 256 cells at res
+        assert (40 * M / cell) ** 2 > 256
+
+        def hit(s, r):
+            sx0, sy0, sx1, sy1, spt = s
+            rx0, ry0, rx1, ry1, rpt = r
+            if spt and rpt:
+                return (sx0, sy0, sx0, sy0) if (sx0, sy0) == (rx0, ry0) \
+                    else None
+            if spt:
+                return ((sx0, sy0, sx0, sy0)
+                        if rx0 <= sx0 <= rx1 and ry0 <= sy0 <= ry1 else None)
+            if rpt:
+                return ((rx0, ry0, rx0, ry0)
+                        if sx0 <= rx0 <= sx1 and sy0 <= ry0 <= sy1 else None)
+            ix0, iy0 = max(sx0, rx0), max(sy0, ry0)
+            ix1, iy1 = min(sx1, rx1), min(sy1, ry1)
+            return (ix0, iy0, ix1, iy1) if ix1 > ix0 and iy1 > iy0 else None
+
+        want = sorted(
+            (sid, ib, s[4] or r[4]) for sid, s in stream for r in refs
+            if (ib := hit(s, r)) is not None)
+        got = _via_bbox(spark, [(sid, *s) for sid, s in stream], refs, res)
+        assert got == want
+        ids = {g[0] for g in got}
+        assert {"pt_on_edge", "pt_on_corner", "pt_on_ref_pt",
+                "pt_on_ref_corner", "same_box", "world"} <= ids
+        assert sum(g[0] == "world" for g in got) > 30
+
     def test_no_python_in_plan(self, spark):
         s = _flat(spark, [("a", 0.0, 0.0, M, M, False)])
         r = _flat_ref(spark, [(0.0, 0.0, M, M, False)])
@@ -380,6 +446,6 @@ class TestTileCover:
             assign_tiles_bbox(flat.withColumn("__ztx", F.lit(1)), [1],
                               prefix="__b")
         ref = _flat_ref(spark, [(0.0, 0.0, M, M, False)])
-        with pytest.raises(ValueError, match="__scell"):
-            bbox_intersection_join(flat.withColumn("__scell", F.lit(1)),
+        with pytest.raises(ValueError, match="__term"):
+            bbox_intersection_join(flat.withColumn("__term", F.lit(1)),
                                    ref, res=8)

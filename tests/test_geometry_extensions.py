@@ -459,9 +459,8 @@ class TestExplodeCollections:
         assert 36.0 in got_areas and 100.0 in got_areas
 
     def test_join_auto_explodes_collections(self, spark):
-        # round-4: spatial_intersection_join flattens GC rows itself
-        # (explode_gc=True default) — no manual explode_collections needed,
-        # and nothing silently drops
+        # round-4: spatial_intersection_join flattens GC rows itself — no
+        # manual explode_collections needed, and nothing silently drops
         from ndjson_spatial_spark.functions.geo import st_area
 
         stream = geom_df(spark, [
@@ -474,11 +473,6 @@ class TestExplodeCollections:
         assert sorted(r["id"] for r in rows) == ["gc"] * 3 + ["plain"]
         got_areas = sorted(round(r["a"], 6) for r in rows if r["a"] is not None)
         assert 36.0 in got_areas and 100.0 in got_areas
-        # opting out restores the old drop-GC behavior
-        out2 = spatial_intersection_join(
-            stream, ref.select("geom"), res=3, explode_gc=False)
-        ids2 = [r["id"] for r in out2.select("id").collect()]
-        assert ids2 == ["plain"]
 
     def test_non_collection_rows_pass_through_unchanged(self, spark):
         from ndjson_spatial_spark.functions.geo import explode_collections

@@ -185,6 +185,33 @@ class TestOneJoin:
                 sc.setJobGroup("tests", "tests")
             assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], kw
 
+    def test_building_contains_and_bbox_joins_runs_no_spark_job(
+            self, spark, mixed):
+        from ndjson_spatial_spark.operators.bbox_fast import (
+            bbox_intersection_join,
+            flat_bbox,
+        )
+        from ndjson_spatial_spark.operators.spatial import join_contains
+
+        sc = spark.sparkContext
+        stream, ref = (spark.read.parquet(p) for p in mixed)
+        flat = flat_bbox(stream).drop("geom")
+        rflat = flat_bbox(ref, prefix="__r").select(
+            "__rminx", "__rminy", "__rmaxx", "__rmaxy", "__rpt")
+        builds = {
+            "contains": lambda: join_contains(ref, stream, "kids", res=9),
+            "bbox": lambda: bbox_intersection_join(flat, rflat, res=9),
+        }
+        for name, build in builds.items():
+            group = f"build-{name}"
+            sc.setJobGroup(group, group)
+            try:
+                build()
+            finally:
+                sc.setJobGroup("tests", "tests")
+            assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], \
+                name
+
     def test_cached_frames_per_call(self, spark, mixed):
         jsc = spark.sparkContext._jsc.sc()
         for kw, most in ((dict(broadcast_ref=True), 0),

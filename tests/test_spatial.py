@@ -182,6 +182,129 @@ class TestJoinContainsGeneral:
         assert got == {"donut": ["solid"]}
 
 
+class TestJoinContainsOracle:
+    """join_contains against a cover-free oracle: every (container,
+    contained) pair through the containment kernels in numpy, with no cell
+    cover, coarsening or pair dedup involved."""
+
+    def test_matches_brute_force_oracle(self, spark):
+        import numpy as np
+        import pandas as pd
+
+        from ndjson_spatial_spark.functions.geo import explode_collections
+        from ndjson_spatial_spark.kernels import geometry as KG
+        from ndjson_spatial_spark.operators.spatial import (
+            _geom_contained_batch,
+            _with_terms,
+        )
+
+        res, cap = 8, 4
+        L = [[[0.0, 20 * M], [10 * M, 20 * M], [10 * M, 24 * M],
+              [4 * M, 24 * M], [4 * M, 30 * M], [0.0, 30 * M],
+              [0.0, 20 * M]]]
+        donut = rect(20 * M, 0, 30 * M, 10 * M) + rect(
+            23 * M, 3 * M, 27 * M, 7 * M)
+        containers = geom_df(spark, [
+            ("sq", gj("Polygon", rect(0, 0, 10 * M, 10 * M))),
+            ("L", gj("Polygon", L)),
+            ("donut", gj("Polygon", donut)),
+            ("tri", gj("Polygon", [[[-30 * M, 0.0], [-10 * M, 0.0],
+                                    [-30 * M, 20 * M], [-30 * M, 0.0]]])),
+            ("big", gj("Polygon", rect(-40 * M, -40 * M, 40 * M, 40 * M))),
+            ("null", None),
+        ])
+        rng = np.random.default_rng(23)
+        rows = [(f"pt{i}", gj("Point", [float(x), float(y)]))
+                for i, (x, y) in enumerate(rng.uniform(-45 * M, 45 * M,
+                                                       (80, 2)))]
+        for i, (x, y, w, h) in enumerate(zip(
+                *rng.uniform(-35 * M, 30 * M, (2, 30)),
+                *rng.uniform(0.2 * M, 12 * M, (2, 30)))):
+            rows.append((f"rect{i}", gj("Polygon", rect(
+                float(x), float(y), float(x + w), float(y + h)))))
+        rows += [
+            # points exactly on container edges and corners
+            ("edge_w", gj("Point", [0.0, 5 * M])),
+            ("edge_e", gj("Point", [10 * M, 5 * M])),
+            ("edge_s", gj("Point", [5 * M, 0.0])),
+            ("edge_n", gj("Point", [5 * M, 10 * M])),
+            ("corner", gj("Point", [0.0, 0.0])),
+            ("edge_l_notch", gj("Point", [4 * M, 27 * M])),
+            ("edge_hole", gj("Point", [23 * M, 5 * M])),
+            ("edge_big", gj("Point", [40 * M, 0.0])),
+            ("in_notch", gj("Polygon", rect(6 * M, 26 * M, 8 * M, 28 * M))),
+            ("in_l", gj("Polygon", rect(M, 21 * M, 9 * M, 23 * M))),
+            ("in_hole", gj("Polygon", rect(24 * M, 4 * M, 26 * M, 6 * M))),
+            ("around_hole", gj("Polygon",
+                               rect(21 * M, M, 29 * M, 9 * M))),
+            ("in_ring", gj("Polygon",
+                           rect(20.5 * M, 0.5 * M, 22 * M, 2 * M))),
+            ("huge", gj("Polygon", rect(-30 * M, -30 * M, 30 * M, 30 * M))),
+            ("line_in", gj("LineString", [[M, M], [9 * M, 9 * M]])),
+            ("line_across", gj("LineString", [[M, M], [15 * M, M]])),
+            ("gc", json.dumps({"type": "GeometryCollection", "geometries": [
+                {"type": "Point", "coordinates": [5 * M, 5 * M]},
+                {"type": "Point", "coordinates": [50 * M, 50 * M]},
+                {"type": "LineString",
+                 "coordinates": [[M, 21 * M], [2 * M, 29 * M]]}]})),
+            ("null", None),
+        ]
+        contained = geom_df(spark, rows)
+
+        # both sides coarsen under the small cap
+        for df in (containers, contained):
+            t = _with_terms(df, "geom", res, cap, res - 6, ())
+            assert t.where(F.col("__res_used") < res).count() > 0
+
+        def parts(g):
+            return pd.DataFrame({k: [g[k]] for k in (
+                "geom_type", "x", "y", "ring_offsets", "part_offsets")})
+
+        def inside(c, g):
+            if g.geom_type == "Point":
+                return bool(KG.points_in_polygon(
+                    np.array(g.x), np.array(g.y), np.array(c.x),
+                    np.array(c.y), np.array(c.ring_offsets),
+                    np.array(c.part_offsets))[0])
+            return bool(_geom_contained_batch.func(
+                pd.Series([0]), parts(g), parts(c))[0])
+
+        # a null GeoJSON parses to a geometry of null fields
+        members = explode_collections(contained).collect()
+        want = {c.id: sorted(m.id for m in members
+                             if c.geom.x and m.geom.x
+                             and inside(c.geom, m.geom))
+                for c in containers.collect()}
+        out = join_contains(containers, contained, "kids", res=res, cap=cap)
+        got = {r.id: sorted(k.id for k in r.kids) for r in out.collect()}
+        assert got == want
+        assert want["null"] == []
+        assert {"in_l", "gc"} <= set(want["L"]) and "in_notch" not in want["L"]
+        assert "in_ring" in want["donut"]
+        assert not {"in_hole", "around_hole"} & set(want["donut"])
+        assert {"huge", "line_in", "corner"} <= set(want["big"])
+        assert "line_across" not in want["sq"]
+
+    def test_staged_names_are_rejected(self, spark):
+        containers = geom_df(spark, [
+            ("sq", gj("Polygon", rect(0, 0, 10 * M, 10 * M)))])
+        contained = geom_df(spark, [("p", gj("Point", [M, M]))])
+        # a containers column named like the staged row id used to be
+        # replaced by the id and then dropped from the output
+        with pytest.raises(ValueError, match="__cid"):
+            join_contains(containers.withColumn("__cid", F.lit(7)),
+                          contained, "kids", res=8)
+        with pytest.raises(ValueError, match="'id'"):
+            join_contains(containers, contained, "id", res=8)
+        # contained columns ride inside the collected structs, so names the
+        # term join stages come through intact
+        dunder = contained.withColumns({"__cid": F.lit(1), "__term": F.lit(2),
+                                        "__cov": F.lit(3)})
+        row = join_contains(containers, dunder, "kids", res=8).collect()[0]
+        assert [(k["id"], k["__cid"], k["__term"], k["__cov"])
+                for k in row.kids] == [("p", 1, 2, 3)]
+
+
 class TestAssignTiles:
     def test_point_tile_matches_closed_form(self, spark):
         # zoom 2, mercator point in the NE quadrant's first tile column
