@@ -653,7 +653,7 @@ def q_length(spark, sf_dir):
 def q_dwithin(spark, sf_dir):
     """Distance-range join under the gate (round-4 extension): all
     (customer, supplier) point pairs within radius 1500 through the
-    cell-disk candidates -> exact-refine plan (operators/knn.join_dwithin)
+    radius-bbox term join with its exact refine (operators/knn.join_dwithin)
     — integer-lattice coordinates make the squared distances exact, so
     the oracle is the brute-force closed form."""
     from ndjson_spatial_spark.operators.knn import join_dwithin

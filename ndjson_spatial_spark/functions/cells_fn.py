@@ -1,5 +1,7 @@
-"""Cell-index column functions: pure-Catalyst cell ids and tile indices,
-plus pandas UDFs over the numpy cell kernels where fan-out favours them.
+"""Cell-index column functions: pure-Catalyst cell ids, tile indices,
+geohash and hex indices, plus `make_st_cells`, a pandas UDF over the numpy
+cell kernels that covers a whole geometry's bbox.  The spatial joins build
+their covers in Catalyst instead (`operators.spatial._with_terms`).
 
 These are the engine's H3/S2-style primitives (BASELINE.json north star):
 every geometry gets a sorted cell-index column; candidate spatial joins are
@@ -22,7 +24,7 @@ from .geo import geom_to_batch
 
 __all__ = ["st_geohash", "decode_geohash", "GEOHASH_BASE32",
            "st_hex_index", "hex_center_expr",
-           "st_cell_of_point", "make_st_cells", "make_disk_cells",
+           "st_cell_of_point", "make_st_cells",
            "cell_id_expr"]
 
 #: largest double strictly below 1.0 — unit_xy's clip ceiling
@@ -105,38 +107,6 @@ def cell_id_expr(tx_col, ty_col, res_col):
 
     morton = spread(tx_col).bitwiseOR(F.shiftleft(spread(ty_col), 1))
     return F.shiftleft(res_col.cast("long"), 58).bitwiseOR(morton)
-
-
-def make_disk_cells(res: int, cap: int = 4096):
-    """Returns disk_cells(x, y, radius) -> struct<cells:array<long>,
-    coarse:boolean>: all LEVEL-`res` cells whose square could contain a
-    point within `radius` of (x, y) — the kNN correctness pass (any point
-    closer than the best candidate lies in this disk's bbox cover).
-
-    A disk whose cover exceeds `cap` cells would be silently coarsened by
-    bbox_cells and its cells would never equi-match the ref side's
-    level-`res` cells — so such rows are FLAGGED (`coarse`) instead, and
-    the kNN operator routes them to the brute-force phase (rare: only
-    re-probes whose first candidate was > ~sqrt(cap)/2 cells away)."""
-    out_type = T.StructType([
-        T.StructField("cells", T.ArrayType(T.LongType())),
-        T.StructField("coarse", T.BooleanType()),
-    ])
-
-    @pandas_udf(out_type)
-    def disk_cells(x: pd.Series, y: pd.Series, radius: pd.Series) -> pd.DataFrame:
-        xv = x.to_numpy()
-        yv = y.to_numpy()
-        r = radius.to_numpy()
-        covers, res_used = KC.bbox_cells(
-            xv - r, yv - r, xv + r, yv + r, res, cap=cap
-        )
-        return pd.DataFrame({
-            "cells": [[int(c) for c in row] for row in covers],
-            "coarse": res_used < res,
-        })
-
-    return disk_cells
 
 
 GEOHASH_BASE32 = "0123456789bcdefghjkmnpqrstuvwxyz"

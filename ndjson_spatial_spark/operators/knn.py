@@ -1,45 +1,137 @@
-"""Nearest-distance / kNN join via expanding cell-ring search.
+"""Nearest-distance, kNN and distance-range joins over one term join.
 
 Reference: `ndjson-spatial nearest-distance --ref f`
 (ndjson-spatial/src/nearest_distance.rs:27-94) — an in-memory R-tree k=1
 nearest-neighbor over reference POINTS, probed per stream POINT, writing the
 SQUARED euclidean distance (`distance_2`, :64-75) into the stream feature.
 
-Engine realization (SURVEY §2.3 J6, §7 phase 3):
+Engine realization (SURVEY §2.3 J6): the three operators share one
+candidate join, `_pairs`, built from the term stages of the other spatial
+joins (`spatial._with_flat_terms`, `spatial._term_join_cols`):
 
-  ring 0   : equi-join stream cell == ref cell, min(d2) per stream row
-  ring k   : unresolved rows explode their 8k ring-k cells and re-join
-  safety   : a candidate found at ring k is not necessarily nearest — one
-             final join over the disk of radius sqrt(best_d2) guarantees it
-             (any closer point lies in that disk's cell cover)
-  fallback : rows still unresolved after max_rings brute-force against the
-             broadcast ref (reference semantics: ref always fits memory —
-             it builds an R-tree over the whole file)
+  cover : each stream point's radius bbox (x±r, y±r) gets its flat terms
+          at one level, by default the largest whose cell side is >= r
+          (`_level`), so a row covers at most 3x3 cells.  Each ref point
+          is a degenerate bbox at the same level: exactly one term.
+  join  : both sides explode `__term` and meet in ONE broadcast
+          equi-join whose condition also holds the exact refinement
+          d2 <= r^2.  A ref point has one term and a row's cover cells
+          are distinct, so a pair meets once: no pair dedup.
 
-Every stage is a DataFrame equi-join on cell ids; the driver loop only
-escalates ring radius (bounded iterations), never touches row data.
+`join_dwithin` is that join, inner.  `nearest_k` runs it as a left join
+at r0 = max_rings * (level-`res` cell side), with the cover level matched
+to r0 (not to `res`: `res` and `max_rings` only set r0), and keeps each
+stream row's k smallest distances in one groupBy that carries the row;
+rows with fewer than k refs within r0 brute-force against the broadcast
+ref in a nested-loop join (the reference holds the whole ref in RAM too):
+
+  stream points -> radius-r0 cover -> LEFT term join (d2 <= r0^2) ref
+    -> groupBy row: k smallest d2 -+- >= k found: done
+                                   +- <  k found: x broadcast ref -> groupBy
+    -> union
+
+Exact: when at least k refs lie within r0, the k nearest lie within r0
+too, and every ref within r0 lies in the row's cover; otherwise the brute
+force sees every ref.  `nearest_distance` is `nearest_k(k=1)` without the
+rank.
+
+No plan holds a Python UDF or a cached frame.  The caller's columns ride
+in a struct beside the staged ones, so any column name passes through
+unchanged.
 """
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cells_fn import make_disk_cells, st_cell_of_point
+from ..kernels.cells import MERC_MAX
+from .spatial import _term_join_cols, _with_flat_terms
 
 __all__ = ["nearest_distance", "nearest_k", "join_dwithin",
            "with_distance_property"]
 
 
-def _points_xy(df: DataFrame, geom_col: str, xn: str, yn: str) -> DataFrame:
-    """Project point rows to flat x/y columns (pure Catalyst; non-point rows
-    silently skipped, nearest_distance.rs:46-55)."""
-    return df.where(F.col(f"{geom_col}.geom_type") == "Point").withColumns(
-        {
-            xn: F.element_at(F.col(f"{geom_col}.x"), 1),
-            yn: F.element_at(F.col(f"{geom_col}.y"), 1),
-        }
+def _points(df: DataFrame, geom_col: str, p: str, row: str | None = None,
+            cols: list = ()) -> DataFrame:
+    """The point rows of `df` as ({p}x, {p}y), led by `row`, a struct of
+    `cols`, when `row` is given; other rows, null geometries too, are
+    silently skipped (nearest_distance.rs:46-55)."""
+    g = F.col(geom_col)
+    return df.where(g["geom_type"] == "Point").select(
+        *([F.struct(*cols).alias(row)] if row else []),
+        F.element_at(g["x"], 1).alias(f"{p}x"),
+        F.element_at(g["y"], 1).alias(f"{p}y"),
     )
+
+
+def _level(radius: float) -> int:
+    """The largest level (up to 24) whose cell side is at least `radius`:
+    a radius bbox then spans at most 3 cells per axis."""
+    return max(0, min(24, int(math.floor(
+        math.log2((2.0 * MERC_MAX) / max(radius, 1e-9))))))
+
+
+def _d2():
+    """The squared distance of a candidate pair."""
+    dx = F.col("__sx") - F.col("__rx")
+    dy = F.col("__sy") - F.col("__ry")
+    return dx * dx + dy * dy
+
+
+def _pairs(s: DataFrame, r: DataFrame, radius: float, res: int,
+           how: str) -> DataFrame:
+    """Every (stream, ref) point pair within `radius`, as `s`'s columns,
+    `r`'s columns and __d2, the squared distance.  `s` carries the point
+    as __sx/__sy, `r` as __rx/__ry.  Both sides' terms are at level `res`
+    and the ref side is broadcast.  With how="left", each stream row also
+    keeps its cover cells that met no ref within `radius`, with null `r`
+    columns and a null __d2."""
+    c = _term_join_cols(res)
+    sx, sy, rx, ry = (F.col(n) for n in ("__sx", "__sy", "__rx", "__ry"))
+    st = _with_flat_terms(s.withColumns({
+        "__qminx": sx - radius, "__qmaxx": sx + radius,
+        "__qminy": sy - radius, "__qmaxy": sy + radius,
+    }), "__q", res, "__").withColumn("__term", c["s_term"])
+    rt = _with_flat_terms(r.withColumns({
+        "__rminx": rx, "__rmaxx": rx, "__rminy": ry, "__rmaxy": ry,
+    }), "__r", res, "__ref_").withColumn("__rterm", c["r_term"])
+    on = (F.col("__term") == F.col("__rterm")) & (_d2() <= radius * radius)
+    return st.join(F.broadcast(rt), on, how).select(
+        *s.columns, *r.columns, _d2().alias("__d2"))
+
+
+def _nearest(stream: DataFrame, ref: DataFrame, k: int, geom_col: str,
+             res: int, max_rings: int) -> DataFrame:
+    """(__row, __best): each stream point row as a struct and its k
+    smallest squared distances, ascending; fewer when the ref holds fewer
+    than k points, and no row at all for an empty ref."""
+    if k < 1:
+        raise ValueError(f"k must be at least 1, got {k}")
+    r0 = float(max_rings) * 2.0 * MERC_MAX / (1 << res)
+    # a stream row's cover rows meet again in the groupBy by this id, so
+    # duplicate stream rows stay apart.  The id is only grouped on, never
+    # joined back, so each branch is self-consistent even if recomputed:
+    # nothing needs to pin it in a cache.  The row rides as a value, not a
+    # key, so its doubles come back as they went in (grouping keys are
+    # NaN/-0.0-normalized)
+    s = _points(stream, geom_col, "__s", "__row", stream.columns) \
+        .withColumn("__sid", F.monotonically_increasing_id())
+    r = _points(ref, geom_col, "__r")
+
+    def best(pairs: DataFrame) -> DataFrame:
+        return pairs.groupBy("__sid").agg(
+            *(F.first(n).alias(n) for n in ("__row", "__sx", "__sy")),
+            F.slice(F.sort_array(F.collect_list("__d2")), 1, k)
+            .alias("__best"))
+
+    near = best(_pairs(s, r, r0, _level(r0), "left"))
+    brute = best(near.where(F.size("__best") < k).drop("__best")
+                 .crossJoin(F.broadcast(r)).select("*", _d2().alias("__d2")))
+    return near.where(F.size("__best") >= k).unionByName(brute) \
+        .select("__row", "__best")
 
 
 def nearest_distance(
@@ -49,101 +141,22 @@ def nearest_distance(
     res: int = 12,
     max_rings: int = 2,
     out_col: str = "distance",
-    broadcast_ref: bool = True,
 ) -> DataFrame:
     """Stream point rows + SQUARED distance to the nearest ref point.
 
     Output: the stream's point rows (non-points dropped, matching the
-    reference's silent skip) with `out_col` (double) appended.  The
-    reference's "null properties -> distance silently not added" quirk
-    (nearest_distance.rs:83-85) is a SINK concern: apply
-    ``with_distance_property`` when emitting NDJSON.
+    reference's silent skip) with `out_col` (double) appended; with an
+    empty ref, no rows.  The reference's "null properties -> distance
+    silently not added" quirk (nearest_distance.rs:83-85) is a SINK
+    concern: apply ``with_distance_property`` when emitting NDJSON.
 
-    Plan shape (3 bounded phases, no unbounded driver loop — each phase is
-    ONE cell equi-join against the broadcast ref):
-      A. disk probe of radius R0 = max_rings * cellsize -> min d2 per row.
-         Correctness: every unexplored cell lies fully outside the R0
-         square, so any point there is farther than R0 — a hit with
-         d <= R0 is the true nearest.
-      B. rows with no hit in A brute-force against the broadcast ref
-         (isolated points; the reference holds the whole ref in RAM too).
-      C. hits with d > R0 re-probe at radius d (disk cover join) — the
-         safety pass that makes ring candidates exact.
+    Plan: `nearest_k` with k=1 (see the module docstring).  `res` and
+    `max_rings` only set the probe radius r0 = max_rings * (level-`res`
+    cell side); rows with no ref within r0 take the brute-force join, and
+    the result is exact whatever they are.
     """
-    from ..kernels.cells import MERC_MAX
-
-    sid = "__sid"
-    s = _points_xy(stream, geom_col, "__sx", "__sy").withColumn(
-        sid, F.monotonically_increasing_id()
-    )
-    s = s.persist()
-
-    r = _points_xy(ref, geom_col, "__rx", "__ry").select("__rx", "__ry")
-    r = r.withColumn("__cell", st_cell_of_point(F.col("__rx"), F.col("__ry"), res))
-    if broadcast_ref:
-        r = F.broadcast(r)
-
-    d2 = (
-        (F.col("__sx") - F.col("__rx")) ** 2 + (F.col("__sy") - F.col("__ry")) ** 2
-    ).alias("__d2")
-
-    def best_of(cand: DataFrame) -> DataFrame:
-        return cand.groupBy(sid).agg(F.min("__d2").alias("__best_d2"))
-
-    cellsize = 2.0 * MERC_MAX / (1 << res)
-    r0 = float(max_rings) * cellsize
-    # phase A's radius is the fixed r0, so size its cap to never coarsen
-    # (coarsened disk cells would miss the ref's level-res cells entirely)
-    disk_cells = make_disk_cells(res, cap=max(4096, (2 * max_rings + 2) ** 2))
-    probe = s.select(sid, "__sx", "__sy")
-
-    # phase A: one disk join
-    candA = probe.withColumn(
-        "__dcell",
-        F.explode(disk_cells(F.col("__sx"), F.col("__sy"), F.lit(r0))["cells"]),
-    )
-    bestA = best_of(
-        candA.join(r, candA["__dcell"] == r["__cell"]).select(sid, d2)
-    ).persist()
-
-    # phase B: brute-force the misses (rare when res fits ref density)
-    missed = probe.join(bestA, sid, "left_anti")
-    bestB = best_of(
-        missed.crossJoin(r.select("__rx", "__ry")).select(sid, d2)
-    )
-
-    # phase C: safety re-probe where the A-hit exceeds the guaranteed
-    # radius.  A re-probe disk too large to cover at level res (its cover
-    # would be cap-coarsened and never equi-match the ref cells) falls back
-    # to brute force instead — correctness over candidate pruning.
-    needs_check = bestA.where(F.col("__best_d2") > r0 * r0).join(probe, sid)
-    with_disk = needs_check.withColumn(
-        "__disk",
-        disk_cells(F.col("__sx"), F.col("__sy"), F.sqrt(F.col("__best_d2"))),
-    )
-    checked = (
-        with_disk.where(~F.col("__disk.coarse"))
-        .withColumn("__dcell", F.explode("__disk.cells"))
-        .join(r, F.col("__dcell") == r["__cell"])
-        .select(sid, d2)
-    )
-    checked_brute = (
-        with_disk.where(F.col("__disk.coarse"))
-        .select(sid, "__sx", "__sy")
-        .crossJoin(r.select("__rx", "__ry"))
-        .select(sid, d2)
-    )
-
-    final = (
-        bestA.select(sid, "__best_d2")
-        .unionByName(bestB)
-        .unionByName(best_of(checked.unionByName(checked_brute)))
-        .groupBy(sid)
-        .agg(F.min("__best_d2").alias(out_col))
-    )
-
-    out = s.join(final, sid, "inner")
-    return out.select(*stream.columns, F.col(out_col))
+    return _nearest(stream, ref, 1, geom_col, res, max_rings).select(
+        "__row.*", F.col("__best")[0].alias(out_col))
 
 
 def nearest_k(
@@ -153,76 +166,25 @@ def nearest_k(
     geom_col: str = "geom",
     res: int = 12,
     max_rings: int = 2,
-    broadcast_ref: bool = True,
 ) -> DataFrame:
     """kNN extension (SURVEY §2.5 O2): the reference only does k=1; the
-    engine generalizes with the same 3-phase shape.
+    engine generalizes it.
 
     Output: stream point rows x k, with (rank:int, distance:double —
-    SQUARED, matching the k=1 operator).  Correctness: a disk probe of
-    radius R0 guarantees the true k-nearest only for rows whose k-th
-    candidate lies within R0; other rows re-probe at their k-th candidate
-    distance (or brute-force when fewer than k candidates exist).
+    SQUARED, matching the k=1 operator); fewer than k rows per stream row
+    when the ref holds fewer than k points.  Equidistant neighbors rank
+    arbitrarily, but the distance multiset is exact.
+
+    Plan (see the module docstring): one left term join at r0 =
+    max_rings * (level-`res` cell side), whose cover is at most 3x3 cells
+    of the level matched to r0; the k smallest distances per stream row in
+    one groupBy; and for rows with fewer than k refs within r0 a broadcast
+    cross-join brute force.  `res` and `max_rings` only set r0, and the
+    result is exact whatever they are.  `k` < 1 raises ValueError.
     """
-    from pyspark.sql import Window
-
-    from ..kernels.cells import MERC_MAX
-
-    sid = "__sid"
-    s = _points_xy(stream, geom_col, "__sx", "__sy").withColumn(
-        sid, F.monotonically_increasing_id()
-    ).persist()
-
-    r = _points_xy(ref, geom_col, "__rx", "__ry").select("__rx", "__ry")
-    r = r.withColumn("__cell", st_cell_of_point(F.col("__rx"), F.col("__ry"), res))
-    if broadcast_ref:
-        r = F.broadcast(r)
-
-    d2 = (
-        (F.col("__sx") - F.col("__rx")) ** 2 + (F.col("__sy") - F.col("__ry")) ** 2
-    ).alias("__d2")
-    # rank by squared distance; equidistant neighbors rank arbitrarily but
-    # the returned DISTANCE multiset is deterministic
-    w = Window.partitionBy(sid).orderBy(F.col("__d2"))
-
-    def topk(cand: DataFrame) -> DataFrame:
-        return (
-            cand.withColumn("__rk", F.row_number().over(w))
-            .where(F.col("__rk") <= k)
-        )
-
-    cellsize = 2.0 * MERC_MAX / (1 << res)
-    r0 = float(max_rings) * cellsize
-    # fixed-radius probe: cap sized so the disk cover never coarsens
-    disk_cells = make_disk_cells(res, cap=max(4096, (2 * max_rings + 2) ** 2))
-    probe = s.select(sid, "__sx", "__sy")
-
-    candA = probe.withColumn(
-        "__dcell",
-        F.explode(disk_cells(F.col("__sx"), F.col("__sy"), F.lit(r0))["cells"]),
-    ).join(r, F.col("__dcell") == r["__cell"]).select(sid, d2)
-    bestA = topk(candA).persist()
-
-    # rows guaranteed complete: k candidates found AND k-th within R0
-    kth = bestA.groupBy(sid).agg(
-        F.count(F.lit(1)).alias("__n"), F.max("__d2").alias("__kd2")
-    )
-    complete = kth.where((F.col("__n") >= k) & (F.col("__kd2") <= r0 * r0))
-    incomplete = probe.join(complete, sid, "left_anti")
-
-    # incomplete rows: brute force against the broadcast ref (covers both
-    # the <k-candidates case and the k-th-beyond-R0 safety case)
-    brute = topk(
-        incomplete.crossJoin(r.select("__rx", "__ry")).select(sid, d2)
-    )
-
-    final = (
-        bestA.join(complete.select(sid), sid, "left_semi")
-        .unionByName(brute)
-        .select(sid, F.col("__rk").alias("rank"), F.col("__d2").alias("distance"))
-    )
-    out = s.join(final, sid, "inner")
-    return out.select(*stream.columns, "rank", "distance")
+    return _nearest(stream, ref, k, geom_col, res, max_rings).select(
+        "__row", F.posexplode("__best").alias("__pos", "distance"),
+    ).select("__row.*", (F.col("__pos") + 1).alias("rank"), "distance")
 
 
 def with_distance_property(
@@ -251,45 +213,28 @@ def join_dwithin(
     geom_col: str = "geom",
     res: int | None = None,
     out_col: str = "distance2",
-    broadcast_ref: bool = True,
 ) -> DataFrame:
     """Distance-RANGE join (round-4 engine extension): one output row per
     (stream point, ref point) pair within `radius` — the ST_DWithin-class
-    operator Spark has no native equivalent for, built from the same cell
-    machinery as the kNN join.
+    operator Spark has no native equivalent for.
 
-    Plan: the cell resolution is chosen so a cell side is at least
-    `radius` (cover of the radius-disk <= ~9 cells/row, bounded fan-out);
-    stream rows explode their disk cover, ref points carry their single
-    level-`res` cell, one equi-join (broadcast or hash-partitioned)
-    produces candidates, and a pure-JVM `dx*dx + dy*dy <= radius^2`
-    refines exactly.  A pair can meet only once (the ref's one cell
-    appears once in the stream's distinct disk cover) — no dedup shuffle.
-    `out_col` carries the SQUARED distance, the reference's distance_2
-    convention (nearest_distance.rs:64-75).  Point rows only (non-points
-    silently skipped, the reference's nearest-distance scope)."""
-    from ..kernels.cells import MERC_MAX
+    Output: the stream's columns, the ref's columns other than `geom_col`,
+    and `out_col`, the SQUARED distance (the reference's distance_2
+    convention, nearest_distance.rs:64-75).  Point rows only (non-points
+    silently skipped, the reference's nearest-distance scope).
 
-    if res is None:
-        # largest res whose cell side still covers the radius
-        import math
-
-        res = max(0, min(24, int(math.floor(
-            math.log2((2.0 * MERC_MAX) / max(radius, 1e-9))))))
-    s = _points_xy(stream, geom_col, "__sx", "__sy")
-    r = _points_xy(ref, geom_col, "__rx", "__ry").withColumn(
-        "__rcell", st_cell_of_point(F.col("__rx"), F.col("__ry"), res)
-    ).drop(geom_col)
-    disk = make_disk_cells(res)
-    s = s.withColumn(
-        "__disk", disk(F.col("__sx"), F.col("__sy"), F.lit(float(radius)))
-    ).withColumn("__scell", F.explode("__disk.cells")).drop("__disk")
-    if broadcast_ref:
-        r = F.broadcast(r)
-    j = s.join(r, F.col("__scell") == F.col("__rcell"))
-    dx = F.col("__sx") - F.col("__rx")
-    dy = F.col("__sy") - F.col("__ry")
-    d2 = dx * dx + dy * dy
-    out = j.where(d2 <= F.lit(float(radius) * float(radius))) \
-        .withColumn(out_col, d2)
-    return out.drop("__sx", "__sy", "__rx", "__ry", "__scell", "__rcell")
+    Plan: the module's term join, inner, at level `res`; by default the
+    largest level whose cell side is at least `radius`, which bounds the
+    cover at 3x3 cells per stream row.  The join is exact at any level: a
+    finer `res` only enumerates more cells.  A negative `radius` raises
+    ValueError.
+    """
+    if radius < 0:
+        raise ValueError(f"radius must be non-negative, got {radius}")
+    radius = float(radius)
+    s = _points(stream, geom_col, "__s", "__srow", stream.columns)
+    r = _points(ref, geom_col, "__r", "__rrow",
+                [c for c in ref.columns if c != geom_col])
+    pairs = _pairs(s, r, radius, _level(radius) if res is None else res,
+                   "inner")
+    return pairs.select("__srow.*", "__rrow.*", F.col("__d2").alias(out_col))

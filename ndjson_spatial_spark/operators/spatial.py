@@ -1169,8 +1169,7 @@ def join_contains(
     # join-back) — monotonically_increasing_id is only deterministic while
     # the scan partitioning is, so an AQE-coalesced or recomputed branch
     # could renumber and silently mis-bucket containment.  Persisting pins
-    # one numbering for every consumer (same discipline as
-    # operators/knn.py).
+    # one numbering for every consumer.
     c = containers.withColumn(cid, F.monotonically_increasing_id()).persist()
     d = contained.select(
         F.struct(*[F.col(x) for x in contained.columns]).alias("__feature"),

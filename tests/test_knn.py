@@ -1,18 +1,23 @@
 """Nearest-distance / kNN tests (FIXTURES.md F6).
 
-Expected distances computed by brute force in numpy; the operator's
-expanding-ring + safety-pass result must match exactly (squared distances,
+Expected distances computed by brute force in numpy; the operators' term
+join + brute-force result must match exactly (squared distances,
 nearest_distance.rs:64-75).
 """
 
 import json
+import math
+from collections import Counter
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from ndjson_spatial_spark.functions.geo import parse_geojson
+from ndjson_spatial_spark.functions.geo import parse_geojson, st_point
+from ndjson_spatial_spark.kernels.cells import MERC_MAX
 from ndjson_spatial_spark.operators.knn import (
+    _level,
+    join_dwithin,
     nearest_distance,
     nearest_k,
     with_distance_property,
@@ -185,3 +190,228 @@ class TestJoinDwithin:
         want = {(s[0], r[0]) for s in sp for r in rp
                 if (s[1] - r[1]) ** 2 + (s[2] - r[2]) ** 2 <= R * R}
         assert got == want
+
+
+# ---- term-join kNN: regression, lifetime, input checks, differential ----
+
+GEOM = ("struct<geom_type:string,x:array<double>,y:array<double>,"
+        "ring_offsets:array<int>,part_offsets:array<int>>")
+
+
+def xy_df(spark, rows, id_col="id"):
+    """rows: (id, x, y) with float x/y -> df(id, geom), Catalyst-built, so
+    the input plan holds no Python node."""
+    return spark.createDataFrame(
+        rows, f"{id_col} long, x double, y double").select(
+            id_col, st_point(F.col("x"), F.col("y")).alias("geom"))
+
+
+def mixed_df(spark, points, id_col="id"):
+    """points: (id, x, y) rows, plus a square polygon row (id -1) and a
+    null-geometry row (id -2), which every knn operator skips."""
+    sq = F.struct(
+        F.lit("Polygon").alias("geom_type"),
+        F.array(*[F.lit(v) for v in (0.0, 10.0, 10.0, 0.0, 0.0)]).alias("x"),
+        F.array(*[F.lit(v) for v in (0.0, 0.0, 10.0, 10.0, 0.0)]).alias("y"),
+        F.array(F.lit(0), F.lit(5)).alias("ring_offsets"),
+        F.array(F.lit(0), F.lit(1)).alias("part_offsets"))
+    odd = spark.createDataFrame([(-1,), (-2,)], f"{id_col} long").select(
+        id_col, F.when(F.col(id_col) == -1, sq)
+        .otherwise(F.lit(None).cast(GEOM)).alias("geom"))
+    return xy_df(spark, points, id_col).unionByName(odd)
+
+
+def sq_dist(s, r):
+    """(len(s), len(r)) squared distances, the operators' arithmetic."""
+    dx = s[:, None, 0] - r[None, :, 0]
+    dy = s[:, None, 1] - r[None, :, 1]
+    return dx * dx + dy * dy
+
+
+class TestJoinDwithinFineRes:
+    def test_fine_res_over_wide_radius_matches_brute_force(self, spark):
+        # radius 100 km spans ~41 level-14 cells per side, so each row's
+        # cover holds ~6.9k cells: the join must stay at level 14, not
+        # coarsen the cover away from the ref's cells
+        rng = np.random.default_rng(14)
+        g = np.linspace(-2e5, 2e5, 10)
+        s = np.stack(np.meshgrid(g, g), -1).reshape(-1, 2)
+        r = rng.uniform(-2e5, 2e5, (50, 2))
+        out = join_dwithin(
+            xy_df(spark, [(i, *map(float, p)) for i, p in enumerate(s)]),
+            xy_df(spark, [(i, *map(float, p)) for i, p in enumerate(r)],
+                  "rid"),
+            radius=1e5, res=14)
+        got = Counter((row.id, row.rid, row.distance2)
+                      for row in out.collect())
+        d = sq_dist(s, r)
+        want = Counter((int(i), int(j), float(d[i, j]))
+                       for i, j in zip(*np.nonzero(d <= 1e10)))
+        assert len(want) > 500
+        assert got == want
+
+
+class TestKnnLifetimeAndPlan:
+    def test_no_cached_frames_and_no_python_nodes(self, spark):
+        # fresh frames per call: an identical plan would hit the
+        # CacheManager and hide a persist
+        rng = np.random.default_rng(3)
+        jsc = spark.sparkContext._jsc
+        base = jsc.getPersistentRDDs().size()
+        calls = (
+            lambda s, r: nearest_distance(s, r, res=12),
+            lambda s, r: nearest_k(s, r, k=3, res=12),
+            lambda s, r: join_dwithin(s, r, radius=5e3),
+        )
+        for i, call in enumerate(calls * 2):
+            s = xy_df(spark, [(j, *map(float, p)) for j, p in enumerate(
+                rng.uniform(0, 5e4, (40, 2)))]).withColumn("run", F.lit(i))
+            r = xy_df(spark, [(j, *map(float, p)) for j, p in enumerate(
+                rng.uniform(0, 5e4, (20, 2)))], "rid")
+            out = call(s, r)
+            assert out.collect()
+            assert jsc.getPersistentRDDs().size() == base, i
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert "ArrowEvalPython" not in plan, i
+            assert "BatchEvalPython" not in plan, i
+
+
+class TestKnnInputChecks:
+    STREAM_STAGED = ("__sx", "__sy", "__sid", "__row", "__srow", "__term",
+                     "__best", "__d2", "__cov", "__qminx", "__bb_minx",
+                     "__tx0", "__ru")
+    REF_STAGED = ("__rx", "__ry", "__rrow", "__rterm", "__ref_cov",
+                  "__rminx", "__ref_res_used")
+
+    def test_staged_names_pass_through(self, spark):
+        # caller columns come back unchanged, a -0.0 too (grouping keys
+        # would normalize it to 0.0)
+        s = xy_df(spark, [(0, 0.0, 0.0), (1, 30.0, 40.0)]).withColumns(
+            {n: F.lit(f"s{n}") for n in self.STREAM_STAGED}).withColumn(
+                "neg_zero", F.lit(-0.0))
+        r = xy_df(spark, [(7, 3.0, 4.0)], "rid").withColumns(
+            {n: F.lit(f"r{n}") for n in self.REF_STAGED})
+        outs = (nearest_distance(s, r, res=12), nearest_k(s, r, k=1, res=12),
+                join_dwithin(s, r, radius=100.0))
+        for out in outs:
+            rows = out.collect()
+            assert sorted(row.id for row in rows) == [0, 1]
+            for row in rows:
+                assert row.geom.geom_type == "Point"
+                for n in self.STREAM_STAGED:
+                    assert row[n] == f"s{n}", n
+                assert math.copysign(1.0, row.neg_zero) == -1.0
+        rows = outs[2].collect()
+        assert sorted(row.distance2 for row in rows) == [25.0, 2025.0]
+        for row in rows:
+            for n in self.REF_STAGED:
+                assert row[n] == f"r{n}", n
+        assert sorted(row.distance for row in outs[0].collect()) \
+            == [25.0, 2025.0]
+
+    def test_k_below_one_raises(self, spark):
+        s = xy_df(spark, [(0, 0.0, 0.0)])
+        for k in (0, -1):
+            with pytest.raises(ValueError, match="k must be"):
+                nearest_k(s, s, k=k)
+
+    def test_negative_radius_raises(self, spark):
+        s = xy_df(spark, [(0, 0.0, 0.0)])
+        with pytest.raises(ValueError, match="radius must be"):
+            join_dwithin(s, s, radius=-1.0)
+
+
+@pytest.fixture(scope="module")
+def corpus():
+    """A seeded stream/ref pair around the origin, where cell edges of
+    the radius-matched level meet: random points, points exactly on cell
+    edges (and a radius away from one), an exact duplicate stream row, a
+    coincident stream pair, a stream point on a ref point, duplicate ref
+    points, and stream rows far beyond r0 from every ref."""
+    res, max_rings = 14, 2
+    r0 = max_rings * 2.0 * MERC_MAX / (1 << res)
+    side = 2.0 * MERC_MAX / (1 << _level(r0))
+    rng = np.random.default_rng(2024)
+    ref = np.vstack([
+        rng.uniform(-3 * side, 3 * side, (30, 2)),
+        side * rng.integers(-3, 4, (6, 2)),              # on edges
+        np.repeat(rng.uniform(-side, side, (1, 2)), 2, 0),   # duplicates
+    ])
+    stream = np.vstack([
+        rng.uniform(-3 * side, 3 * side, (40, 2)),
+        side * rng.integers(-3, 4, (6, 2)),              # on edges
+        side * rng.integers(-3, 4, (4, 2)) + [r0, 0.0],  # bbox on an edge
+        ref[[3, 31]],                                    # on ref points
+        [[40 * side, 40 * side], [-60 * side, 10 * side]],   # far
+    ])
+    stream = np.vstack([stream, stream[[0, 5]]])         # coincident rows
+    ids = list(range(len(stream) - 2)) + [1000, 5]       # 5 is an exact dup
+    return dict(res=res, max_rings=max_rings, r0=r0,
+                s=stream, ids=ids, r=ref,
+                s_rows=[(i, float(x), float(y))
+                        for i, (x, y) in zip(ids, stream)],
+                r_rows=[(j, float(x), float(y))
+                        for j, (x, y) in enumerate(ref)])
+
+
+class TestKnnDifferential:
+    """All three operators against numpy brute force on `corpus`, as
+    per-row distance multisets."""
+
+    def _frames(self, spark, c, ref_rows=None):
+        ref_rows = c["r_rows"] if ref_rows is None else ref_rows
+        return (mixed_df(spark, c["s_rows"]),
+                mixed_df(spark, ref_rows, "rid"))
+
+    def test_corpus_takes_both_phases(self, corpus):
+        within = (sq_dist(corpus["s"], corpus["r"]) <= corpus["r0"] ** 2) \
+            .sum(1)
+        assert (within >= 3).any() and (within < 3).any()
+        assert (within == 0).any()
+
+    def test_nearest_distance(self, spark, corpus):
+        s, r = self._frames(spark, corpus)
+        out = nearest_distance(s, r, res=corpus["res"],
+                               max_rings=corpus["max_rings"])
+        got = Counter((row.id, row.distance) for row in out.collect())
+        d = sq_dist(corpus["s"], corpus["r"]).min(1)
+        assert got == Counter(zip(corpus["ids"], map(float, d)))
+
+    def test_nearest_k(self, spark, corpus):
+        k = 3
+        s, r = self._frames(spark, corpus)
+        out = nearest_k(s, r, k=k, res=corpus["res"],
+                        max_rings=corpus["max_rings"])
+        got = Counter((row.id, row.rank, row.distance)
+                      for row in out.collect())
+        d = np.sort(sq_dist(corpus["s"], corpus["r"]), 1)[:, :k]
+        want = Counter((i, rank + 1, float(v)) for i, row in
+                       zip(corpus["ids"], d) for rank, v in enumerate(row))
+        assert got == want
+
+    def test_join_dwithin_at_r0(self, spark, corpus):
+        s, r = self._frames(spark, corpus)
+        rad = corpus["r0"]
+        out = join_dwithin(s, r, radius=rad)
+        got = Counter((row.id, row.rid, row.distance2)
+                      for row in out.collect())
+        d = sq_dist(corpus["s"], corpus["r"])
+        want = Counter((corpus["ids"][i], int(j), float(d[i, j]))
+                       for i, j in zip(*np.nonzero(d <= rad * rad)))
+        assert got == want
+
+    def test_ref_with_fewer_than_k_points(self, spark, corpus):
+        s, r = self._frames(spark, corpus, corpus["r_rows"][:2])
+        out = nearest_k(s, r, k=5, res=corpus["res"])
+        got = Counter((row.id, row.rank, row.distance)
+                      for row in out.collect())
+        d = np.sort(sq_dist(corpus["s"], corpus["r"][:2]), 1)
+        want = Counter((i, rank + 1, float(v)) for i, row in
+                       zip(corpus["ids"], d) for rank, v in enumerate(row))
+        assert got == want
+
+    def test_empty_ref(self, spark, corpus):
+        s, r = self._frames(spark, corpus, [])
+        assert nearest_distance(s, r).count() == 0
+        assert nearest_k(s, r, k=2).count() == 0
+        assert join_dwithin(s, r, radius=corpus["r0"]).count() == 0

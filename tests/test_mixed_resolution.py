@@ -7,8 +7,9 @@ that coarsened rows still meet fine rows in every spatial operator:
     (stage 1 must stay a SUPERSET even when one side coarsened);
   - assign_tiles: a cover far above any join cap still emits exactly the
     true zoom-level tiles;
-  - nearest_distance: an over-cap re-probe disk falls back to brute force
-    instead of joining coarse cells that can never match.
+  - nearest_distance: with a wide probe radius (40 level-res cells), a row
+    whose refs all lie beyond it still gets its true nearest from the
+    brute-force join.
 """
 
 import json
@@ -239,9 +240,9 @@ class TestCoarsenedTiles:
 
 class TestCoarseDiskFallback:
     def test_knn_overcap_reprobe_falls_back_to_brute(self, spark):
-        # phase A (radius 40 cells) finds only a corner point at ~56.6c;
-        # the re-probe disk then covers >4096 cells -> coarse -> brute
-        # force must find the true nearest at 41c just outside the A-bbox
+        # the probe radius r0 is 40 cells: the corner point (~56.6c) and
+        # the true nearest (41c, just outside r0) both lie beyond it, so
+        # the row takes the brute-force join, which must find the 41c one
         res = 12
         c = 2.0 * KC.MERC_MAX / (1 << res)
         stream = geom_df(spark, [("q", point(0.0, 0.0))])
