@@ -160,8 +160,19 @@ def _parse_batch(s: pd.Series) -> pd.DataFrame:
     )
 
 
-parse_geojson = pandas_udf(_parse_batch, returnType=GEOM_TYPE)
-parse_geojson.__doc__ = "GeoJSON geometry string -> canonical geometry struct."
+_parse_geojson_udf = pandas_udf(_parse_batch, returnType=GEOM_TYPE)
+
+
+def parse_geojson(col) -> "F.Column":
+    """GeoJSON geometry string -> canonical geometry struct.
+
+    A null string gives a null struct, so `geom IS NULL` finds it.  A
+    string the parser does not accept (malformed JSON, an unknown type,
+    missing coordinates) gives a struct whose fields are all null: the
+    row keeps its place, and `geom.geom_type IS NULL` finds both cases.
+    A Feature parses as its geometry.  One Arrow UDF per call."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.when(c.isNotNull(), _parse_geojson_udf(c))
 
 
 def geom_to_batch(pdf: pd.DataFrame):
@@ -810,8 +821,12 @@ def st_simplify(geom_col, tolerance: float):
             if t is None:
                 continue
             if t in ("Point", "MultiPoint"):
-                for c in range(5):
-                    res.iat[i, c] = geom.iat[i, c]
+                # array fields arrive as lists or numpy arrays (the latter
+                # when the struct crossed Arrow); pandas would unwrap a
+                # 1-element array to a 0-d one, so copy them as lists
+                res.iat[i, 0] = t
+                for c in range(1, 5):
+                    res.iat[i, c] = list(geom.iat[i, c])
                 continue
             if t not in ("LineString", "MultiLineString"):
                 continue

@@ -39,6 +39,8 @@ true cover size (the flat terms never coarsen); everything else is narrow.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -151,13 +153,26 @@ def bbox_intersection_join(
         "__term", c["s_term"])
     r = _with_flat_terms(ref, "__r", res, "__ref_").withColumn(
         "__term", c["r_term"])
+    j = _bbox_join_cols(res)
+    s_bbox = _bbox_names("__b")
+    return s.join(F.broadcast(r), "__term").where(j["cond"]).select(
+        *[n for n in stream.columns if n not in s_bbox], *j["out"])
+
+
+@functools.lru_cache(maxsize=256)
+def _bbox_join_cols(res: int) -> dict:
+    """The pure Column trees of `bbox_intersection_join`, memoized per `res`
+    like `spatial._term_join_cols`: the pair condition (the term join's
+    dedup and the point/rect refinement) and the __i* output columns."""
+    from .spatial import _term_join_cols
+
     sp, rp = F.col("__bpt"), F.col("__rpt")
     keep, ibox = point_rect_refinement(sp, rp, _box("__b"), _box("__r"))
-    s_bbox = _bbox_names("__b")
-    return s.join(F.broadcast(r), "__term").where(c["dedup"] & keep).select(
-        *[n for n in stream.columns if n not in s_bbox],
-        *[v.alias(n) for n, v in zip(_bbox_names("__i"), ibox + (sp | rp,))],
-    )
+    return {
+        "cond": _term_join_cols(res)["dedup"] & keep,
+        "out": [v.alias(n)
+                for n, v in zip(_bbox_names("__i"), ibox + (sp | rp,))],
+    }
 
 
 #: the columns `_tiles` stages (zoom, tile ranges, exploded tile x/y)
@@ -165,13 +180,13 @@ _TILE_STAGED = ("__z", "__ztx0", "__ztx1", "__zty0", "__zty1",
                 "__ztx", "__zty")
 
 
-def _tiles(df: DataFrame, zooms, p: str, refine) -> DataFrame:
+def _tiles(df: DataFrame, zooms, p: str, keep) -> DataFrame:
     """The zoom-tile cover of the flat bbox under prefix `p`, refined.
 
     Every row explodes its zooms (ONE explode, so several zooms still scan
     the input once), then the integer tile-x range, then the tile-y range
-    of its bbox.  ``refine(tminx, tminy, tmaxx, tmaxy)`` gets the tile
-    bounds as Columns and returns the keep predicate.  Emits the input
+    of its bbox.  ``keep`` is the refinement: a predicate over the tile
+    bounds `_tile_bounds` gives (and the input columns).  Emits the input
     columns other than the five `p` bbox columns plus
     (zoom, tile_x, tile_y, tile_id); tile_id is the Morton cell id.
     Rows with a null bbox emit nothing (the sequence explodes are empty).
@@ -185,47 +200,58 @@ def _tiles(df: DataFrame, zooms, p: str, refine) -> DataFrame:
     makes the cover hold every tile the refinement can accept.
     """
     _reject_staged(df.columns, _TILE_STAGED)
+    c = _tile_cols(tuple(int(z) for z in zooms), p)
+    bbox = _bbox_names(p)
+    out = df.withColumn("__z", c["z"]).withColumns(c["ranges"])
+    out = out.withColumn("__ztx", c["tx"]).withColumn("__zty", c["ty"])
+    return out.where(keep).select(
+        *[n for n in df.columns if n not in bbox], *c["out"])
+
+
+def _edges():
+    """(xedge, yedge): tile t's west and north edge at zoom __z."""
+    size = F.lit(2.0 * MERC_MAX) / F.pow(F.lit(2.0), F.col("__z"))
+    return (lambda t: F.lit(-MERC_MAX) + t * size,
+            lambda t: F.lit(MERC_MAX) - t * size)
+
+
+@functools.lru_cache(maxsize=1)
+def _tile_bounds() -> tuple:
+    """(tminx, tminy, tmaxx, tmaxy) of the tile (__ztx, __zty) at zoom __z,
+    the Columns a `_tiles` refinement reads."""
+    xedge, yedge = _edges()
+    tx, ty = F.col("__ztx"), F.col("__zty")
+    return xedge(tx), yedge(ty + 1), xedge(tx + 1), yedge(ty)
+
+
+@functools.lru_cache(maxsize=256)
+def _tile_cols(zooms: tuple, p: str) -> dict:
+    """The pure Column trees of `_tiles`, memoized per (zooms, p): the zoom
+    explode, the widened tile ranges, the tile explodes and the outputs."""
     z = F.col("__z")
-    size = F.lit(2.0 * MERC_MAX) / F.pow(F.lit(2.0), z)
     last = F.pow(F.lit(2.0), z).cast("long") - 1
-
-    def xedge(t):
-        return F.lit(-MERC_MAX) + t * size
-
-    def yedge(t):
-        return F.lit(MERC_MAX) - t * size
-
+    xedge, yedge = _edges()
     minx, miny, maxx, maxy = _box(p)
     x0, x1 = _tile_index(minx, z), _tile_index(maxx, z)
     y0, y1 = _tile_index(maxy, z, flip=True), _tile_index(miny, z, flip=True)
-
-    out = df.withColumn(
-        "__z", F.explode(F.array(*[F.lit(int(zz)) for zz in zooms]))
-    )
-    out = out.withColumns({
-        "__ztx0": F.when((x0 > 0) & (minx < xedge(x0)), x0 - 1)
-                   .otherwise(x0),
-        "__ztx1": F.when((x1 < last) & (maxx >= xedge(x1 + 1)), x1 + 1)
-                   .otherwise(x1),
-        "__zty0": F.when((y0 > 0) & (maxy > yedge(y0)), y0 - 1)
-                   .otherwise(y0),
-        "__zty1": F.when((y1 < last) & (miny <= yedge(y1 + 1)), y1 + 1)
-                   .otherwise(y1),
-    })
-    out = out.withColumn("__ztx", F.explode(F.sequence("__ztx0", "__ztx1")))
-    out = out.withColumn("__zty", F.explode(F.sequence("__zty0", "__zty1")))
-
     tx, ty = F.col("__ztx"), F.col("__zty")
-    tminx, tmaxx = xedge(tx), xedge(tx + 1)
-    tminy, tmaxy = yedge(ty + 1), yedge(ty)
-    bbox = _bbox_names(p)
-    return out.where(refine(tminx, tminy, tmaxx, tmaxy)).select(
-        *[c for c in df.columns if c not in bbox],
-        z.cast("int").alias("zoom"),
-        tx.alias("tile_x"),
-        ty.alias("tile_y"),
-        cell_id_expr(tx, ty, z).alias("tile_id"),
-    )
+    return {
+        "z": F.explode(F.array(*[F.lit(zz) for zz in zooms])),
+        "ranges": {
+            "__ztx0": F.when((x0 > 0) & (minx < xedge(x0)), x0 - 1)
+                       .otherwise(x0),
+            "__ztx1": F.when((x1 < last) & (maxx >= xedge(x1 + 1)), x1 + 1)
+                       .otherwise(x1),
+            "__zty0": F.when((y0 > 0) & (maxy > yedge(y0)), y0 - 1)
+                       .otherwise(y0),
+            "__zty1": F.when((y1 < last) & (miny <= yedge(y1 + 1)), y1 + 1)
+                       .otherwise(y1),
+        },
+        "tx": F.explode(F.sequence("__ztx0", "__ztx1")),
+        "ty": F.explode(F.sequence("__zty0", "__zty1")),
+        "out": [z.cast("int").alias("zoom"), tx.alias("tile_x"),
+                ty.alias("tile_y"), cell_id_expr(tx, ty, z).alias("tile_id")],
+    }
 
 
 def assign_tiles_bbox(
@@ -242,16 +268,17 @@ def assign_tiles_bbox(
     the tile with tminx <= x < tmaxx and tminy < y <= tmaxy, a rect to
     every tile it overlaps with strictly positive area.
     """
-    p = prefix
+    return _tiles(df, zooms, prefix, _bbox_tile_keep(prefix))
 
-    def keep(tminx, tminy, tmaxx, tmaxy):
-        minx, miny, maxx, maxy = _box(p)
-        return F.when(
-            F.col(f"{p}pt"),
-            (tminx <= minx) & (minx < tmaxx)
-            & (tminy < miny) & (miny <= tmaxy),
-        ).otherwise(
-            (minx < tmaxx) & (maxx > tminx) & (miny < tmaxy) & (maxy > tminy)
-        )
 
-    return _tiles(df, zooms, p, keep)
+@functools.lru_cache(maxsize=256)
+def _bbox_tile_keep(p: str) -> "F.Column":
+    """assign_tiles_bbox's keep predicate for the flat bbox under `p`."""
+    tminx, tminy, tmaxx, tmaxy = _tile_bounds()
+    minx, miny, maxx, maxy = _box(p)
+    return F.when(
+        F.col(f"{p}pt"),
+        (tminx <= minx) & (minx < tmaxx) & (tminy < miny) & (miny <= tmaxy),
+    ).otherwise(
+        (minx < tmaxx) & (maxx > tminx) & (miny < tmaxy) & (maxy > tminy)
+    )

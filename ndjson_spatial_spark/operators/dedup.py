@@ -632,9 +632,10 @@ def duplicate_spans(
     Document contraction (round-6, guide §2.2 — dedup before the
     expensive work, active when ``count_within_doc``): documents with
     IDENTICAL normalized text are contracted to one representative (keyed
-    by ``xxhash64(trim(lower(text)))``, so even tokenization runs only on
-    representatives) carrying a multiplicity ``m`` BEFORE window
-    explosion; the duplicate test weights window counts by ``m``
+    by ``(xxhash64(t), length(t))`` of ``t = trim(lower(text))``, so even
+    tokenization runs only on representatives) carrying a multiplicity
+    ``m`` BEFORE window explosion; the duplicate test weights window
+    counts by ``m``
     (``sum(m) >= 2`` — every copy contributes its occurrences), spans are
     computed once per distinct text, and the (doc_id, key) mapping joins
     them back to every copy.  Exactness: the duplicate criterion is
@@ -644,7 +645,10 @@ def duplicate_spans(
     operator's own raison d'être) this divides the exploded-window
     exchange by the duplication factor.  The distinct-doc variant
     (``count_within_doc=False``) would need per-key set weighting, so it
-    generates windows from every document, uncontracted.
+    generates windows from every document, uncontracted.  A collision of
+    the contraction key would give one document another's whole span set,
+    so the key carries the text length beside the 64-bit hash: two
+    different texts must collide in the hash AND have equal lengths.
     """
     L = int(min_tokens)
     if L < 2:
@@ -661,12 +665,12 @@ def duplicate_spans(
     gram = F.xxhash64(F.slice(F.col("__toks"), F.col("s") + 1, L))
     # doc contraction (see docstring): windows are generated from ONE
     # representative per distinct token sequence, weighted by multiplicity.
-    # The key is the hash of the NORMALIZED TEXT (identical normalized
-    # text => identical token split), so tokenization itself only runs on
-    # the representatives, not the whole corpus.
+    # The key is the hash and length of the NORMALIZED TEXT (identical
+    # normalized text => identical token split), so tokenization itself
+    # only runs on the representatives, not the whole corpus.
     if count_within_doc:
-        keyed = df.select(F.col(id_col), t.alias("__t")) \
-            .withColumn("__key", F.xxhash64("__t"))
+        keyed = df.select(F.col(id_col), t.alias("__t")).withColumn(
+            "__key", F.struct(F.xxhash64("__t"), F.length("__t")))
         reps = keyed.groupBy("__key").agg(
             F.min_by("__t", F.col(id_col)).alias("__t"),
             F.count(F.lit(1)).alias("__m"),

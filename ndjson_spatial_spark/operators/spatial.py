@@ -17,6 +17,8 @@ Z-order clustered, range-partitionable, and salting-friendly.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -31,6 +33,7 @@ from ..functions.cells_fn import cell_id_expr
 from .bbox_fast import (
     _bbox_names,
     _reject_staged,
+    _tile_bounds,
     _tiles,
     assign_tiles_bbox,
     flat_bbox,
@@ -629,13 +632,20 @@ def _with_flat_terms(df: DataFrame, p: str, res: int,
     as `_with_terms` names them.  The terms stay at `res` (min_res = res:
     no coarsening, so no ancestors and the cap is moot); a row with a null
     bbox gets a null cover and emits no term."""
+    return _staged_terms(df, *_flat_terms_cols(p, res, prefix))
+
+
+@functools.lru_cache(maxsize=256)
+def _flat_terms_cols(p: str, res: int, prefix: str) -> tuple:
+    """`_with_flat_terms`' (__bb_* stage, term stages, outputs), memoized
+    per (p, res, prefix)."""
     core = _terms_core(res, 0, res, (), False)
     bbox = [F.col(f"{p}{n}").alias(f"__bb_{n}")
             for n in ("minx", "maxx", "miny", "maxy")]
     out = [core["cov"].alias(f"{prefix}cov"),
            core["anc"].alias(f"{prefix}anc"),
            F.col("__ru").alias(f"{prefix}res_used")]
-    return _staged_terms(df, bbox, core, out)
+    return bbox, core, out
 
 
 def _staged_terms(df: DataFrame, bbox: list, c: dict, out: list) -> DataFrame:
@@ -657,16 +667,15 @@ _TERMS_STAGED = ("__bb_minx", "__bb_maxx", "__bb_miny", "__bb_maxy",
                  "__tx0", "__tx1", "__ty0", "__ty1", "__lv")
 
 
+@functools.lru_cache(maxsize=256)
 def _terms_cols(geom_col: str, res: int, cap: int, min_res: int,
                 anc_levels: tuple, gated: bool) -> dict:
     """The staged-terms Column bundle, memoized per (geom_col, res, cap,
     min_res, anc_levels, gated) — Columns are immutable name-resolved
     trees, and building the per-cell Morton lambdas costs ~1 s of py4j
-    round trips per spatial-join construction otherwise."""
-    key = (geom_col, res, cap, min_res, anc_levels, gated)
-    got = _TERMS_COLS_CACHE.get(key)
-    if got is not None:
-        return got
+    round trips per spatial-join construction otherwise.  Every pure
+    Column tree a query build constructs is memoized the same way, on the
+    parameters it depends on; DataFrames never are."""
     # everything below the bbox stage references only the staged column
     # NAMES, so the (large) cov/anc/ru trees are shared across geometry
     # columns — a second geom_col only rebuilds the cheap outer stages
@@ -676,7 +685,7 @@ def _terms_cols(geom_col: str, res: int, cap: int, min_res: int,
           ("__bb_minx", "__bb_maxx", "__bb_miny", "__bb_maxy")]
     valid = g["x"].isNotNull() & (F.size(g["x"]) > 0)
     na = F.lit(None).cast("array<long>")
-    cols = {
+    return {
         "bbox": [
             F.array_min(g["x"]).alias("__bb_minx"),
             F.array_max(g["x"]).alias("__bb_maxx"),
@@ -695,21 +704,14 @@ def _terms_cols(geom_col: str, res: int, cap: int, min_res: int,
             .when(_is_axis_rect(g, *bb), 1.0).otherwise(2.0),
             bb[0], bb[2], bb[1], bb[3]),
     }
-    if len(_TERMS_COLS_CACHE) >= 256:
-        _TERMS_COLS_CACHE.clear()
-    _TERMS_COLS_CACHE[key] = cols
-    return cols
 
 
+@functools.lru_cache(maxsize=256)
 def _terms_core(res: int, cap: int, min_res: int, anc_levels: tuple,
                 gated: bool) -> dict:
     """The geometry-independent stages of `_terms_cols`, memoized."""
     from ..functions.cells_fn import _unit_u_expr, _unit_v_expr
 
-    key = (res, cap, min_res, anc_levels, gated)
-    got = _TERMS_CORE_CACHE.get(key)
-    if got is not None:
-        return got
     uv = [
         _unit_u_expr(F.col("__bb_minx")).alias("__u0"),
         _unit_v_expr(F.col("__bb_maxy")).alias("__v0"),
@@ -774,16 +776,8 @@ def _terms_core(res: int, cap: int, min_res: int, anc_levels: tuple,
     else:
         anc = F.array().cast("array<long>")
 
-    core = {"uv": uv, "ru": ru.alias("__ru"), "tiles": tiles,
+    return {"uv": uv, "ru": ru.alias("__ru"), "tiles": tiles,
             "cov": cov, "anc": anc}
-    if len(_TERMS_CORE_CACHE) >= 256:
-        _TERMS_CORE_CACHE.clear()
-    _TERMS_CORE_CACHE[key] = core
-    return core
-
-
-_TERMS_COLS_CACHE: dict = {}
-_TERMS_CORE_CACHE: dict = {}
 
 
 # --------------------------------------------------------- intersection
@@ -1005,12 +999,10 @@ def spatial_intersection_join(
     return fast.unionByName(slow)
 
 
+@functools.lru_cache(maxsize=256)
 def _term_join_cols(res: int) -> dict:
     """The Column trees every term join shares, memoized per `res`: the
     two sides' `__term` explodes and the pair `dedup` predicate."""
-    got = _TERM_JOIN_COLS_CACHE.get(res)
-    if got is not None:
-        return got
     # term emission (see module comment): matches enumerate each candidate
     # pair once per SHARED term —
     #   s.cov(plain)  == r.cov(plain)   same-res candidates (the hot path)
@@ -1050,26 +1042,16 @@ def _term_join_cols(res: int) -> dict:
         F.transform(F.array_intersect("__anc", "__ref_cov"), _term_anc),
     ))
     single_term = (F.size("__cov") == 1) & (F.size("__anc") == 0)
-    cols = {"s_term": s_term, "r_term": r_term,
+    return {"s_term": s_term, "r_term": r_term,
             "dedup": single_term | (F.col("__term") == min_common)}
-    if len(_TERM_JOIN_COLS_CACHE) >= 256:
-        _TERM_JOIN_COLS_CACHE.clear()
-    _TERM_JOIN_COLS_CACHE[res] = cols
-    return cols
 
 
-_TERM_JOIN_COLS_CACHE: dict = {}
-
-
+@functools.lru_cache(maxsize=256)
 def _join_cols(geom_col: str, res: int) -> dict:
     """The pure Column trees of spatial_intersection_join, memoized per
     (geom_col, res) like `_terms_cols`: the per-side kind filters, and per
     route the pair predicate (the shared dedup + route + refinement) and
     the output geometry."""
-    key = (geom_col, res)
-    got = _JOIN_COLS_CACHE.get(key)
-    if got is not None:
-        return got
     dedup = _term_join_cols(res)["dedup"]
 
     # Routes.  Point/rect pairs take pure-Catalyst interval arithmetic over
@@ -1099,20 +1081,13 @@ def _join_cols(geom_col: str, res: int) -> dict:
     # it would be pushed below the projection and run the kernel twice
     exact = F.explode(F.filter(F.array(_pair_intersection(sg, rg)),
                                lambda g: g["geom_type"].isNotNull()))
-    cols = {
+    return {
         "s_gen": sm[0] == 2, "r_pr": rm[0] < 2, "r_gen": rm[0] == 2,
         "fast": dedup & ~general & keep,
         "fast_geom": F.when(s_pt, sg).when(r_pt, rg).otherwise(overlap),
         "slow": dedup & general,
         "slow_geom": exact,
     }
-    if len(_JOIN_COLS_CACHE) >= 256:
-        _JOIN_COLS_CACHE.clear()
-    _JOIN_COLS_CACHE[key] = cols
-    return cols
-
-
-_JOIN_COLS_CACHE: dict = {}
 
 
 # -------------------------------------------------------------- contains
@@ -1457,13 +1432,21 @@ def assign_tiles(
     kernel `_geom_intersects_rect`.
     """
     _reject_staged(df.columns, _bbox_names("__b"))
-    g = F.col(geom_col)
+    c = _assign_tiles_cols(geom_col)
     flat = flat_bbox(df, geom_col)
-    is_fast = is_bbox_shape(g)
-    fast = assign_tiles_bbox(flat.where(is_fast), zooms, prefix="__b")
-    slow = _tiles(flat.where(~is_fast), zooms, "__b",
-                  lambda *tile: _geom_intersects_rect(g, *tile))
+    fast = assign_tiles_bbox(flat.where(c["fast"]), zooms, prefix="__b")
+    slow = _tiles(flat.where(c["slow"]), zooms, "__b", c["keep"])
     return fast.unionByName(slow)
+
+
+@functools.lru_cache(maxsize=256)
+def _assign_tiles_cols(geom_col: str) -> dict:
+    """assign_tiles' shape split and its general rows' exact tile
+    refinement, memoized per `geom_col` (the refinement reads it)."""
+    g = F.col(geom_col)
+    is_fast = is_bbox_shape(g)
+    return {"fast": is_fast, "slow": ~is_fast,
+            "keep": _geom_intersects_rect(g, *_tile_bounds())}
 
 
 @pandas_udf(GEOM_TYPE)

@@ -23,6 +23,21 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
+    """The engine's SparkSession (created once per process: getOrCreate
+    ignores master and conf on an existing session).
+
+    ``extra_conf`` entries are set after the defaults below and override
+    them.  One default is session-wide and not engine-only: the optimizer
+    rule InferFiltersFromGenerate is excluded (see the note at the
+    setting), so it is off for every query of the session, user queries
+    too.  An explode over a SCANNED array column loses the inferred
+    `size(e) > 0 AND e IS NOT NULL` filter, and with it any pushdown or
+    pruning that filter allowed.  A caller who wants the rule back passes
+    ``extra_conf={"spark.sql.optimizer.excludedRules": ""}`` (or their own
+    exclusion list), or sets that conf at runtime with ``spark.conf.set``;
+    the engine's plans stay correct, but each of their explodes then
+    evaluates its generator input twice per row.
+    """
     master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
     shuffle_partitions = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     b = (

@@ -63,6 +63,18 @@ class TestParse:
         assert rows["bad"].geom_type is None
         assert rows["nullrow"].geom_type is None
 
+    def test_null_string_parses_to_null_struct(self, spark, geoms):
+        # a null string is a null geometry; malformed JSON keeps a struct
+        # whose fields are all null
+        assert {r.id for r in geoms.where(F.col("geom").isNull())
+                .collect()} == {"nullrow"}
+        bad = geoms.where("id = 'bad'").select("geom").collect()[0].geom
+        assert bad is not None and all(v is None for v in bad)
+        plan = (spark.createDataFrame([("{}",)], ["geojson"])
+                .select(parse_geojson("geojson").alias("g"))
+                ._jdf.queryExecution().executedPlan().toString())
+        assert plan.count("ArrowEvalPython") == 1, plan
+
     def test_feature_wrapper_tolerated(self, spark):
         f = json.dumps({"type": "Feature", "properties": {"a": 1},
                         "geometry": {"type": "Point", "coordinates": [1.0, 2.0]}})

@@ -269,10 +269,10 @@ class TestJoinContainsOracle:
             return bool(_geom_contained_batch.func(
                 pd.Series([0]), parts(g), parts(c))[0])
 
-        # a null GeoJSON parses to a geometry of null fields
+        # a null GeoJSON parses to a null geometry
         members = explode_collections(contained).collect()
         want = {c.id: sorted(m.id for m in members
-                             if c.geom.x and m.geom.x
+                             if c.geom and m.geom and c.geom.x and m.geom.x
                              and inside(c.geom, m.geom))
                 for c in containers.collect()}
         out = join_contains(containers, contained, "kids", res=res, cap=cap)
